@@ -23,7 +23,7 @@ distributed fit."""
 
 from __future__ import annotations
 
-import os
+import functools
 import shutil
 import uuid
 from pathlib import Path
@@ -43,6 +43,7 @@ from propensity_spark.operators.features import (
     q_household_features,
 )
 from propensity_spark.operators.relational import q_class_ratios, q_labels
+from propensity_spark.session import run_overlapped
 
 SEED = 42
 
@@ -78,31 +79,22 @@ def build_training_set(
             # through each other's tails. The tables are distinct paths
             # with per-table writer locks — no shared state, results
             # unchanged.
-            from concurrent.futures import ThreadPoolExecutor
-
-            grain_jobs = int(os.environ.get("SPARK_GRAFT_GRAIN_JOBS", "3")) or 3
-            with ThreadPoolExecutor(max_workers=grain_jobs) as pool:
-                builds = [
-                    pool.submit(
-                        lambda: hh.create(
-                            q_household_features(spark, sf_dir).withColumn("day", day)
+            run_overlapped(
+                spark,
+                [
+                    lambda: hh.create(
+                        q_household_features(spark, sf_dir).withColumn("day", day)
+                    ),
+                    lambda: cm.create(
+                        q_commodity_features(spark, sf_dir).withColumn("day", day)
+                    ),
+                    lambda: hc.create(
+                        q_household_commodity_features(spark, sf_dir).withColumn(
+                            "day", day
                         )
                     ),
-                    pool.submit(
-                        lambda: cm.create(
-                            q_commodity_features(spark, sf_dir).withColumn("day", day)
-                        )
-                    ),
-                    pool.submit(
-                        lambda: hc.create(
-                            q_household_commodity_features(spark, sf_dir).withColumn(
-                                "day", day
-                            )
-                        )
-                    ),
-                ]
-                for b in builds:
-                    b.result()
+                ],
+            )
 
         labels = q_labels(spark, sf_dir).withColumn("day", day)
         ts = hh.lookup(labels, "household")
@@ -296,6 +288,12 @@ _MANIFEST_SCHEMA = (
 )
 
 
+def _fit_width(spark: SparkSession, n_fits: int, parts: int) -> int:
+    """Per-commodity fits in flight: at most 3, and only as many as the
+    session's cores hold at `parts` tasks per fit stage."""
+    return max(1, min(3, n_fits, spark.sparkContext.defaultParallelism // parts))
+
+
 def train_commodity_models(
     spark: SparkSession,
     sf_dir: str,
@@ -442,27 +440,20 @@ def train_commodity_models(
     # that. Results are unchanged: fits are per-commodity independent
     # (disjoint slices, disjoint model paths), randomSplit/GBT are
     # seeded per-DataFrame (concurrency does not change data or
-    # partitioning), and pool.map preserves the sorted manifest order.
-    # Worker count derives from session capacity — a lower-core session
-    # (the driver's scaling bench) degrades to the sequential loop.
-    workers = int(os.environ.get("SPARK_GRAFT_TRAIN_JOBS", "0")) or max(
-        1,
-        min(3, len(commodities), spark.sparkContext.defaultParallelism // parts),
-    )
-    # Job descriptions (and inherited local properties) are per-thread
-    # only under PySpark's pinned-thread mode (PYSPARK_PIN_THREAD,
-    # default true since 3.2); with it disabled the labels bleed across
-    # the pooled threads — cosmetic (UI labels), never correctness.
+    # partitioning), and results come back in the sorted manifest order.
+    # Width derives from session capacity (_fit_width) — a lower-core
+    # session degrades to the sequential loop. Each fit labels its jobs
+    # with setJobDescription; every fit gets its own copy of the
+    # caller's local properties, so a label never crosses fits and the
+    # caller's job group carries over.
     ordered = sorted(commodities)
-    if workers > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            manifest_rows = list(pool.map(_train_one, ordered))
-    else:
-        manifest_rows = [_train_one(c) for c in ordered]
-    # job labels are thread-local: the pool threads took theirs with
-    # them, but the sequential path set the main thread's — clear it so
+    manifest_rows = run_overlapped(
+        spark,
+        [functools.partial(_train_one, c) for c in ordered],
+        width=_fit_width(spark, len(ordered), parts),
+    )
+    # job labels are thread-local: the overlapped fits took theirs with
+    # them, but the sequential path set the caller's — clear it so
     # the last commodity's label doesn't annotate unrelated later jobs.
     spark.sparkContext.setJobDescription(None)
     return spark.createDataFrame(manifest_rows, _MANIFEST_SCHEMA)

@@ -48,23 +48,6 @@ def cut_lineage(
     return df.localCheckpoint(eager=eager)
 
 
-def cut_every() -> int:
-    """Lineage-cut stride for the iterative loops (r10, guide §1.2).
-    The per-round plans are linear in depth (each iteration references
-    the previous ranks exactly once), so cutting every k-th round is
-    semantically free — results are bit-identical at any stride; only
-    checkpoint frequency changes. MEASURED at sf0.1 (profile_split,
-    min-of-3, tpch_q1 control): stride 2 made pagerank_affinity WORSE
-    (build 4.9 -> 6.1 s) — each cut's AQE execution re-optimizes the
-    deeper two-round plan and the saved barrier does not pay for it —
-    so the default stays 1 (cut every round). SPARK_GRAFT_GRAPH_CUT
-    exposes the stride for clusters where the per-round barrier (not
-    the optimizer) dominates, e.g. high-latency driver-executor links."""
-    import os
-
-    return max(1, int(os.environ.get("SPARK_GRAFT_GRAPH_CUT", "1")))
-
-
 def pagerank(
     edges: DataFrame,
     d: float = PR_DAMPING,
@@ -105,8 +88,7 @@ def pagerank(
     ranks = base.select(
         "node", "n", F.expr("round(cast(1.0 as double) / n, 12)").alias("rank")
     )
-    stride = cut_every()
-    for i in range(iters):
+    for _ in range(iters):
         contribs = (
             edges.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
             .join(deg, "src")
@@ -125,7 +107,13 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint and (i + 1) % stride == 0:
+        # Cut every round. The per-round plans are linear in depth, so
+        # any stride gives bit-identical ranks, but cutting every 2nd
+        # round measured slower at sf0.1 (r10, min-of-3, tpch_q1
+        # control: pagerank_affinity build 4.9 -> 6.1 s): each cut's AQE
+        # pass re-optimizes the deeper two-round plan, and the saved
+        # barrier does not pay for it.
+        if checkpoint:
             ranks = cut_lineage(ranks, checkpoint_dir, eager=False)
     return ranks.join(
         deg.select(F.col("src").alias("node"), "out_deg"), "node"
@@ -937,8 +925,7 @@ def personalized_pagerank(
         verts = cut_lineage(verts, checkpoint_dir, eager=False)
     teleport = F.when(F.col("node") == source, F.lit(1.0)).otherwise(F.lit(0.0))
     ranks = verts.select("node", F.expr(f"round(cast(node = '{source}' as double), 12)").alias("rank"))
-    stride = cut_every()
-    for i in range(iters):
+    for _ in range(iters):
         contribs = (
             edges.join(ranks.select(F.col("node").alias("src"), "rank"), "src")
             .join(deg, "src")
@@ -951,7 +938,7 @@ def personalized_pagerank(
                 (1 - d) * teleport + d * F.coalesce("c", F.lit(0.0)), 12
             ).alias("rank"),
         )
-        if checkpoint and (i + 1) % stride == 0:
+        if checkpoint:  # every round, as in pagerank()
             ranks = cut_lineage(ranks, checkpoint_dir, eager=False)
     return ranks
 

@@ -16,6 +16,7 @@ Every stage is a DataFrame plan; actions happen only at writes.
 
 from __future__ import annotations
 
+import functools
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from propensity_spark.feature_store import DEFAULT_STORE, FeatureTable
 from propensity_spark.ml.training import build_training_set, score_batch, train_commodity_models
 from propensity_spark.operators.relational import top_commodities
+from propensity_spark.session import run_overlapped
 
 
 class Pipeline:
@@ -95,8 +97,6 @@ class Pipeline:
         exactly once. `force=True` recomputes (source-data revision)."""
         from propensity_spark.operators.features import _spark_features
 
-        from concurrent.futures import ThreadPoolExecutor
-
         stamp = F.lit(day).cast("date")
 
         def _one(spec):
@@ -114,16 +114,14 @@ class Pipeline:
         # (guide §2.6) so one grain's scan-fused serial segments and
         # write tails back-fill with the others' work. Validation dict
         # order stays the grain-spec order (results gathered in order).
-        import os
-
         specs = self._grain_specs(asof=F.col("day") <= stamp)
-        jobs = int(os.environ.get("SPARK_GRAFT_GRAIN_JOBS", "3")) or 3
         # clear up-front (as the old sequential code did): if a grain's
         # merge/validate raises, the attribute must not silently retain
         # the PREVIOUS run's validation results.
         self.last_validation = {}
-        with ThreadPoolExecutor(max_workers=jobs) as pool:
-            results = list(pool.map(_one, specs))
+        results = run_overlapped(
+            self.spark, [functools.partial(_one, spec) for spec in specs]
+        )
         self.last_validation = {n: v for n, v in results if v is not None}
 
     def backfill(self, days, force: bool = False) -> None:
@@ -135,8 +133,6 @@ class Pipeline:
         identical (pinned by the bit-exact equivalence test): each
         anchor sees only facts at-or-before it. Already-materialized
         days are skipped (same idempotency as the daily path)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         from propensity_spark.operators.features import multi_day_features
 
         def _one(spec):
@@ -148,11 +144,10 @@ class Pipeline:
 
         # same §2.6 overlap as engineer_features: three independent
         # grain tables, one multi-anchor merge each.
-        import os
-
-        jobs = int(os.environ.get("SPARK_GRAFT_GRAIN_JOBS", "3")) or 3
-        with ThreadPoolExecutor(max_workers=jobs) as pool:
-            list(pool.map(_one, self._grain_specs()))
+        run_overlapped(
+            self.spark,
+            [functools.partial(_one, spec) for spec in self._grain_specs()],
+        )
 
     def score(self, manifest: DataFrame, day) -> DataFrame:
         """04c equivalent: universe x features -> per-model transform.
@@ -187,12 +182,7 @@ class Pipeline:
         # would re-run every model's transform over the feature join
         # (guide §5 "reused AND expensive to recompute"). Persist for
         # THIS publish only; released in `finally`.
-        # SPARK_GRAFT_QUERY_CACHE=0 disables (A/B knob).
-        import os
-
-        _cache = os.environ.get("SPARK_GRAFT_QUERY_CACHE", "1") != "0"
-        if _cache:
-            scores = scores.persist()
+        scores = scores.persist()
         obs = Observation("publish_metrics")
         unpivoted = scores.select(
             "household_key", "day", "commodity_desc", "prediction"
@@ -205,23 +195,22 @@ class Pipeline:
             F.count(F.when(F.col("prediction").isNull(), 1)).alias("n_null"),
         )
         clean = F.regexp_replace("commodity_desc", "#", "_")
-        present = sorted(
-            r[0] for r in scores.select(clean.alias("c")).distinct().collect()
-        )
-        pivoted = (
-            scores.withColumn("commodity_clean", clean)
-            .groupBy("household_key", "day")
-            .pivot("commodity_clean", present)
-            .agg(F.first("prediction"))
-        )
         paths = (str(self.out / "propensities_unpivoted"), str(self.out / "propensities_pivoted"))
         try:
+            present = sorted(
+                r[0] for r in scores.select(clean.alias("c")).distinct().collect()
+            )
+            pivoted = (
+                scores.withColumn("commodity_clean", clean)
+                .groupBy("household_key", "day")
+                .pivot("commodity_clean", present)
+                .agg(F.first("prediction"))
+            )
             for df, path in ((unpivoted, paths[0]), (pivoted, paths[1])):
                 self._promote(df, path)
             self.last_publish_metrics = obs.get
         finally:
-            if _cache:
-                scores.unpersist()
+            scores.unpersist()
         return paths
 
     def _promote(self, df: DataFrame, path: str) -> None:

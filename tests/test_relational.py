@@ -137,6 +137,23 @@ def test_control_memo_keyed_by_application_id(spark, sf_dir):
     assert all(isinstance(k[0], str) for k in R._CONTROL_ROWS)
 
 
+def test_scan_memo_is_bound_to_its_session(spark, sf_dir):
+    """load_table's scan memo belongs to the calling session: another
+    session (own catalog and confs) gets a DataFrame bound to itself,
+    never the memoized one of the first session; the same session
+    still hits its memo."""
+    from propensity_spark.io import load_table
+
+    first = load_table(spark, sf_dir, "nation")
+    assert load_table(spark, sf_dir, "nation") is first
+    other = spark.newSession()
+    df = load_table(other, sf_dir, "nation")
+    assert df.sparkSession is other
+    assert df is not first
+    assert load_table(other, sf_dir, "nation") is df
+    assert df.count() == first.count()
+
+
 def test_register_views_sql_surface_parity(spark, sf_dir, tmp_path):
     """A SQL-first reference user's queries run verbatim against the
     reference-named temp views (01:171, 02:40, 04a:76)."""
