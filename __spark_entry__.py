@@ -31,9 +31,11 @@ EXPECTED_MIN_QUERIES = 164
 # every remaining registry entry ranked by its newest driver-verified
 # round across the CORRECTNESS_r*.json files that existed when the
 # rotation was built (rounds < GATE_ROTATION_ROUND), ties broken by
-# registry order, taking the first 50 overall. With 164 entries and 50
-# slots the oldest-first tail re-verifies every entry at least every 4
-# rounds, the lint's STALENESS_BUDGET (tools/gate_lint.py). Regenerate
+# registry order, taking the first 50 overall. The head takes slots from
+# the oldest-first tail, so no fixed re-verify period holds; what holds is
+# the lint's STALENESS_BUDGET (tools/gate_lint.py): every entry 3 or more
+# rounds stale is in the gate, and `compute_rotation` raises when the
+# head leaves too few slots for them. Regenerate
 # with `python tools/gate_lint.py --propose`; the committed list is pinned
 # against that computation by tests/test_entry_contract.py. Ledger:
 # COVERAGE.md. r10 cohort: the 20 r09-optimizer-touched entries with no

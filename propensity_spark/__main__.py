@@ -176,10 +176,10 @@ def run(args, spark=None) -> int:
         return rc
 
     if args.cmd == "daily":
-        from pathlib import Path
+        from propensity_spark.io import committed
 
         rc = 0
-        if Path(manifest_path).exists():
+        if committed(manifest_path):
             manifest = spark.read.parquet(manifest_path)
         else:
             # first daily without a stored manifest: engineer the day's

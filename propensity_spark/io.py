@@ -145,6 +145,16 @@ def as_date(d):
     return datetime.datetime.strptime(str(d), "%Y-%m-%d").date()
 
 
+def committed(path) -> bool:
+    """True when a Spark write to `path` finished. The job commit leaves
+    `_SUCCESS`; a write killed mid-job leaves only `_temporary/`, which
+    a parquet read rejects (UNABLE_TO_INFER_SCHEMA), so a directory that
+    merely exists is not a readable table."""
+    from pathlib import Path
+
+    return (Path(path) / "_SUCCESS").exists()
+
+
 # Scan-definition memo: `spark.read.parquet` costs ~100 ms of DRIVER
 # time per call (py4j round trip + DataSource resolution + footer
 # schema read) — q_tpch_join_suite's 64 load_table calls measured 6.6 s

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from propensity_spark.feature_store import DEFAULT_STORE, FeatureTable
+from propensity_spark.io import committed
 from propensity_spark.operators.features import (
     q_commodity_features,
     q_household_commodity_features,
@@ -70,7 +71,7 @@ def build_training_set(
     hc = FeatureTable(
         spark, "household_commodity", ["household_key", "commodity_desc", "day"], store_base
     )
-    if materialize or not stage.exists():
+    if materialize or not committed(stage):
         if materialize or not hc.exists():
             # Overlap the three independent grain builds (guide §2.6):
             # each grain's partial-aggregation map side is scan-fused

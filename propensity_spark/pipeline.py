@@ -28,6 +28,23 @@ from propensity_spark.operators.relational import top_commodities
 from propensity_spark.session import run_overlapped
 
 
+def _pivot_scores(scores: DataFrame) -> DataFrame:
+    """Wide score grain: one row per (household_key, day), one column
+    per commodity present in `scores` ('#' -> '_'). The bounded collect
+    of commodity names pins the pivot's column list, so the pivot
+    itself is one aggregation with no extra distinct job."""
+    clean = F.regexp_replace("commodity_desc", "#", "_")
+    present = sorted(
+        r[0] for r in scores.select(clean.alias("c")).distinct().collect()
+    )
+    return (
+        scores.withColumn("commodity_clean", clean)
+        .groupBy("household_key", "day")
+        .pivot("commodity_clean", present)
+        .agg(F.first("prediction"))
+    )
+
+
 class Pipeline:
     def __init__(self, spark: SparkSession, sf_dir: str, base: str | None = None):
         self.spark = spark
@@ -194,18 +211,9 @@ class Pipeline:
             ),
             F.count(F.when(F.col("prediction").isNull(), 1)).alias("n_null"),
         )
-        clean = F.regexp_replace("commodity_desc", "#", "_")
         paths = (str(self.out / "propensities_unpivoted"), str(self.out / "propensities_pivoted"))
         try:
-            present = sorted(
-                r[0] for r in scores.select(clean.alias("c")).distinct().collect()
-            )
-            pivoted = (
-                scores.withColumn("commodity_clean", clean)
-                .groupBy("household_key", "day")
-                .pivot("commodity_clean", present)
-                .agg(F.first("prediction"))
-            )
+            pivoted = _pivot_scores(scores)
             for df, path in ((unpivoted, paths[0]), (pivoted, paths[1])):
                 self._promote(df, path)
             self.last_publish_metrics = obs.get
@@ -261,16 +269,7 @@ class Pipeline:
         partition-pruned scan and the write is a dynamic overwrite of
         those same partitions. History is never read or rewritten."""
         path = str(self.out / "propensities_pivoted")
-        clean = F.regexp_replace("commodity_desc", "#", "_")
-        present = sorted(
-            r[0] for r in scores.select(clean.alias("c")).distinct().collect()
-        )
-        incoming = (
-            scores.withColumn("commodity_clean", clean)
-            .groupBy("household_key", "day")
-            .pivot("commodity_clean", present)
-            .agg(F.first("prediction"))
-        )
+        incoming = _pivot_scores(scores)
         keys = ["household_key", "day"]
         if not Path(path).exists():
             self._promote(incoming, path)

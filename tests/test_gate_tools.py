@@ -1,13 +1,18 @@
-"""The gate tooling is itself load-bearing (the r06 lesson: a
-canonicalizer strictly weaker than the driver's shipped two hash-red
-rounds), so its behavior is pinned here — pure-python, no Spark.
+"""The gate and measurement tooling is itself load-bearing (the r06
+lesson: a canonicalizer strictly weaker than the driver's shipped two
+hash-red rounds), so its behavior is pinned here — pure-python except
+the scale_run test, which drives the timing loop on the shared session.
 """
 
 from __future__ import annotations
 
+import json
 import math
+from pathlib import Path
 
-from tools.gate_lint import count_negzero
+import pytest
+
+from tools.gate_lint import GATE_SLOTS, compute_rotation, count_negzero
 from tools.local_verify import canon, table_hash
 
 
@@ -137,3 +142,65 @@ def test_bigresult_canon_escapes_separator_and_null():
     sql = _checksum_sql(["a", "b"], "t")
     inner = sql.split("FROM (", 1)[1].rsplit(")", 1)[0]
     assert con.execute(f"SELECT count(DISTINCT line) FROM ({inner})").fetchone()[0] == 5
+
+
+def test_compute_rotation_rejects_head_that_crowds_out_stale_entries(tmp_path):
+    """A head that leaves too few slots for the entries STALENESS_BUDGET-1
+    rounds stale must fail when the gate is built, not one round later
+    in `--rotation`. Synthetic history: 45 entries last verified r01, 55
+    in r02; the r05 gate must hold all 45 (3 rounds stale at r04)."""
+    names = [f"q{i:03d}" for i in range(100)]
+    for rnd, verified in ((1, names[:45]), (2, names[45:])):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps({n: {} for n in verified})
+        )
+
+    gate = compute_rotation(names, upto_round=5, repo=tmp_path)
+    assert len(gate) == GATE_SLOTS and set(names[:45]) <= set(gate)
+    # a head inside the stale cohort costs no extra slots
+    gate = compute_rotation(names, upto_round=5, head=names[:6], repo=tmp_path)
+    assert gate[:6] == names[:6] and set(names[:45]) <= set(gate)
+    # 5 fresh head entries fit exactly; a 6th would push a stale one out
+    compute_rotation(names, upto_round=5, head=names[60:65], repo=tmp_path)
+    with pytest.raises(ValueError, match="overflows"):
+        compute_rotation(names, upto_round=5, head=names[60:66], repo=tmp_path)
+
+
+def test_scale_run_reports_rows_exponent_flags_and_split(spark):
+    """tools/scale_run.py, the one per-query timing loop: a two-dir run
+    reports rows equal to a direct count, the exponent over the parsed
+    SF ratio (10), the red-flag audit and, with --split, the four phase
+    minima; a one-dir run keeps the BENCH_sf1_r{N}.json record keys."""
+    import __spark_entry__ as e
+    from tools.scale_run import main, sf_of
+
+    small, big = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
+    assert sf_of(big) / sf_of(small) == pytest.approx(10.0)
+    qs = e.queries()
+    names = ["tpch_q1", "labels"]
+    counts = {(n, d): qs[n](spark, d).count() for n in names for d in (small, big)}
+    base = ["--sf-dir", small, big, "--only", *names, "--repeats", "1"]
+    for split in (False, True):
+        rec = main(base + ["--split"] * split, spark=spark)
+        assert set(rec) == {"repeats", "queries", "rows"}
+        for n in names:
+            q = rec["queries"][n]
+            assert set(q) == {"sf0.001_sec", "sf0.01_sec", "exponent",
+                              "plan_red_flags", *["split"] * split}
+            for d in (small, big):
+                assert rec["rows"][n][Path(d).name] == counts[n, d]
+            assert q["exponent"] == pytest.approx(
+                math.log(q["sf0.01_sec"] / q["sf0.001_sec"]) / math.log(10.0), abs=1e-3
+            )
+            assert isinstance(q["plan_red_flags"], list)
+            if split:
+                for d in ("sf0.001", "sf0.01"):
+                    assert set(q["split"][d]) == {"build", "plan", "noop", "count"}
+                    assert q["split"][d]["count"] == q[f"{d}_sec"]
+
+    rec = main(["--sf-dir", big, "--heavy", "--only", "tpch_q1", "--repeats", "1"],
+               spark=spark)
+    assert set(rec) == {"metric", "value", "unit", "sf", "repeats", "queries"}
+    assert rec["metric"] == "heavy_queries_total_sf0.01" and rec["sf"] == 0.01
+    assert set(rec["queries"]["tpch_q1"]) == {"sec", "rows", "plan_red_flags"}
+    assert rec["queries"]["tpch_q1"]["rows"] == counts["tpch_q1", big]

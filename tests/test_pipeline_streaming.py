@@ -1,6 +1,7 @@
 """End-to-end pipeline orchestration + stateful streaming + catalog."""
 
 import datetime
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,12 +10,35 @@ from pyspark.sql import functions as F
 def test_pipeline_init_daily_roundtrip(spark, sf_dir, tmp_path):
     from propensity_spark.pipeline import Pipeline
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def attributed(group, job):
+        """Run `job` under job group `group`; every Spark job it starts
+        must land in that group (overlapped backfill grains and model
+        fits included), none outside any group."""
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            out = job()
+            grouped = tracker.getJobIdsForGroup(group)
+            escaped = set(tracker.getJobIdsForGroup(None)) - ungrouped
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert grouped, group
+        assert not escaped, (group, sorted(escaped))
+        return out
+
     p = Pipeline(spark, sf_dir, str(tmp_path / "pipe"))
     day = datetime.date(2024, 2, 1)
-    manifest = p.run_init(day, n_commodities=2)
+    manifest = attributed("init", lambda: p.run_init(day, n_commodities=2))
     assert manifest.count() == 2
     assert {r["stage"] for r in manifest.collect()} == {"Production"}
-    unpivoted_path, pivoted_path = p.run_daily(day, manifest)
+    unpivoted_path, pivoted_path = attributed(
+        "daily", lambda: p.run_daily(day, manifest)
+    )
 
     unpivoted = spark.read.parquet(unpivoted_path)
     assert unpivoted.where(~F.col("prediction").between(0, 1)).count() == 0
@@ -402,6 +426,36 @@ def test_cli_init_and_daily_dispatch(spark, sf_dir, tmp_path):
 
     args = ap.parse_args(["drift", "--sf-dir", sf_dir, "--base", base])
     assert run(args, spark=spark) == 0
+
+
+def test_cli_daily_reruns_after_killed_writes(spark, sf_dir, tmp_path):
+    """A `daily` killed mid-write leaves only `_temporary/` under the
+    manifest and the day's training-set stage. A re-run must treat both
+    as absent (no `_SUCCESS`) and rebuild them, not fail reading them."""
+    import datetime
+
+    from propensity_spark.__main__ import build_parser, run
+    from propensity_spark.pipeline import Pipeline
+
+    base = str(tmp_path / "cli_killed")
+    day = datetime.date(2024, 2, 1)
+    p = Pipeline(spark, sf_dir, base)
+    stage = Path(p.store) / "training_set" / f"day={day}"
+    manifest = p.base / "manifest"
+    for torn in (stage, manifest):
+        (torn / "_temporary" / "0").mkdir(parents=True)
+
+    args = build_parser().parse_args(
+        ["daily", "--sf-dir", sf_dir, "--base", base, "--day", str(day),
+         "--model-type", "lr"]
+    )
+    rc = run(args, spark=spark)
+    assert (stage / "_SUCCESS").exists() and (manifest / "_SUCCESS").exists()
+    stages = [r["stage"] for r in spark.read.parquet(str(manifest)).collect()]
+    assert "Production" in stages
+    # exit 1 only flags a commodity whose fit failed (a manifest row)
+    assert rc == (1 if "failed" in stages else 0)
+    assert p.read_published("unpivoted", day).count() > 0
 
 
 def test_cli_drift_exit_code_pages_on_psi_break(spark, sf_dir, tmp_path):

@@ -38,7 +38,8 @@ from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 FLAGS = {"--negzero", "--rotation", "--propose"}
 ARGS = [a for a in sys.argv[1:] if a not in FLAGS]
@@ -63,14 +64,19 @@ GATE_SLOTS = 50
 STALENESS_BUDGET = 4
 
 
-def driver_history(repo: Path) -> tuple[dict[str, int], int]:
-    """Newest driver-verified round per entry, and the newest round seen."""
+def driver_history(
+    repo: Path, upto_round: int | None = None
+) -> tuple[dict[str, int], int]:
+    """Newest driver-verified round per entry, and the newest round seen,
+    ignoring CORRECTNESS files of rounds >= upto_round."""
     import json
 
     latest: dict[str, int] = {}
     newest_round = 0
     for f in sorted(repo.glob("CORRECTNESS_r*.json")):
         rnd = int(f.stem.split("_r")[1])
+        if upto_round is not None and rnd >= upto_round:
+            continue
         newest_round = max(newest_round, rnd)
         for name in json.loads(f.read_text()):
             latest[name] = max(latest.get(name, 0), rnd)
@@ -81,6 +87,7 @@ def compute_rotation(
     names: list[str],
     upto_round: int | None = None,
     head: tuple[str, ...] | list[str] = (),
+    repo: Path = REPO,
 ) -> list[str]:
     """Deterministic gate: ``head`` entries first (in the given order —
     the round's TOUCHED list, per the r09 VERDICT: entries whose
@@ -88,20 +95,27 @@ def compute_rotation(
     staleness refresh), then rank the rest by newest driver-verified
     round (ignoring CORRECTNESS files >= upto_round, so a committed gate
     stays reproducible after later rounds land), ties by registry order,
-    and take the first GATE_SLOTS entries."""
-    import json
+    and take the first GATE_SLOTS entries.
 
-    repo = Path(__file__).resolve().parents[1]
-    latest: dict[str, int] = {}
-    for f in sorted(repo.glob("CORRECTNESS_r*.json")):
-        rnd = int(f.stem.split("_r")[1])
-        if upto_round is not None and rnd >= upto_round:
-            continue
-        for name in json.loads(f.read_text()):
-            latest[name] = max(latest.get(name, 0), rnd)
+    Raises ValueError when the head leaves too few slots for the entries
+    that are STALENESS_BUDGET - 1 or more rounds stale: each of those
+    would fail `--rotation` once this round's CORRECTNESS file lands."""
+    latest, newest_round = driver_history(repo, upto_round)
+    # the gate is for the round after the newest one counted
+    current = newest_round if upto_round is None else upto_round - 1
     order = {n: i for i, n in enumerate(names)}
     lead = [n for n in head if n in order]
     taken = set(lead)
+    due = [
+        n for n in names
+        if n not in taken and current - latest.get(n, 0) >= STALENESS_BUDGET - 1
+    ]
+    if len(lead) + len(due) > GATE_SLOTS:
+        raise ValueError(
+            f"gate for r{current + 1:02d} overflows: {len(lead)} head entries "
+            f"+ {len(due)} entries >= {STALENESS_BUDGET - 1} rounds stale "
+            f"> {GATE_SLOTS} slots; shorten GATE_PRIORITY_HEAD"
+        )
     ranked = sorted(
         (n for n in names if n not in taken),
         key=lambda n: (latest.get(n, 0), order[n]),
@@ -112,8 +126,7 @@ def compute_rotation(
 def rotation_audit() -> int:
     import __spark_entry__ as e
 
-    repo = Path(__file__).resolve().parents[1]
-    latest, newest_round = driver_history(repo)
+    latest, newest_round = driver_history(REPO)
     names = list(e.queries())
     scheduled = set(e.DRIVER_GATE_PRIORITY)
     problems: list[str] = []
@@ -170,8 +183,7 @@ def propose_rotation() -> int:
     GATE_PRIORITY_HEAD first, then oldest-first)."""
     import __spark_entry__ as e
 
-    repo = Path(__file__).resolve().parents[1]
-    latest, newest_round = driver_history(repo)
+    latest, newest_round = driver_history(REPO)
     names = list(e.queries())
     head = getattr(e, "GATE_PRIORITY_HEAD", ())
     gate = compute_rotation(names, upto_round=newest_round + 1, head=head)

@@ -1,7 +1,7 @@
 """Build an sf1-equivalent fixture by replicating /root/testdata/sf0.1
 with key-shifted copies — the local stand-in for "the same workload at
 10x the data" used by tools/scale_run.py (SCALE.md's scaling-exponent
-measurement).
+measurement, and the standing sf1 bench via `--sf-dir .tmp/sf1 --heavy`).
 
 Scaling shape (mirrors how a real retail deployment grows):
 * FACTS scale 10x — customer/orders/lineitem/events get `mult` copies
