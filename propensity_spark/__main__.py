@@ -24,7 +24,8 @@ job would) and persists the manifest; `--model-type` controls that
 implicit training. `init` prints the training manifest, `daily` the
 published paths plus the in-flight publish metrics and PSI drift,
 `weekly` the manifest, `drift` the PSI report. Exit code is non-zero
-on failed training rows, and `daily`/`drift` exit 2 when PSI exceeds
+on failed training rows (a commodity skipped for a one-class training
+split is not a failure), and `daily`/`drift` exit 2 when PSI exceeds
 `--psi-threshold` (default 0.25; pass a negative value to disable) —
 schedulers alert without parsing output.
 """

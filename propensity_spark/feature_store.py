@@ -1,4 +1,4 @@
-"""Feature store: Delta-backed in spirit, parquet-backed in this image.
+"""Feature store: versioned parquet tables with Delta-style semantics.
 
 The reference uses the Databricks Feature Store (04a:612-630 create +
 merge write, 04b:195-217 FeatureLookup, 04c:181-186 score_batch).
@@ -9,12 +9,12 @@ Open equivalents here (SURVEY.md §1 'Spark mapping'):
   at 100 TB this is the difference between a partition read and a full
   scan).
 * ``FeatureTable.merge`` — the S5/S7 MERGE-upsert keyed on the PK
-  (which deliberately includes ``day``, 04a:599). Without Delta on the
-  classpath the upsert is: dynamic-partition overwrite of ONLY the day
-  partitions present in the incoming batch, where each rewritten
-  partition = incoming rows + existing rows anti-joined on the PK.
-  Delta's MERGE does the same thing with a transaction log; semantics
-  match, atomicity is per-partition instead of per-table.
+  (which deliberately includes ``day``, 04a:599). The batch is written
+  once, straight into the next version of the day partitions it
+  touches; for days already in the store the existing rows the batch
+  does not replace (anti-join on the PK) are appended to that same
+  version. One pointer flip per day commits it, as Delta's MERGE
+  commits one log entry; atomicity is per day partition.
 
 * ``FeatureTable.lookup`` — J7's exact-key left-outer join with the
   per-table column-rename prefix (`household__*`, ...) and key/day
@@ -22,7 +22,7 @@ Open equivalents here (SURVEY.md §1 'Spark mapping'):
   documented choice over as-of semantics (04a:599); `lookup_asof`
   offers the range variant the reference lacks.
 
-Physical layout (parquet backend) — snapshot-safe versioned partitions:
+Physical layout — snapshot-safe versioned partitions:
 
     <table>/day=<D>/v=<N>/*.parquet   immutable version dirs
     <table>/day=<D>/_CURRENT          committed-version list; last = live
@@ -54,22 +54,6 @@ from pyspark.sql import functions as F
 REPO_ROOT = Path(__file__).resolve().parents[1]
 DEFAULT_STORE = REPO_ROOT / ".tmp" / "feature_store"
 
-# Delta swap-in (judge r2 item 4): when delta-spark is on the
-# classpath, merge() dispatches to a transactional MERGE INTO and
-# create/read use the delta format — per-table atomicity, concurrent-
-# reader safety, and time travel, with identical upsert semantics to
-# the parquet fallback below. This image ships no delta-spark, so the
-# path is exercised by a skipif-guarded pytest that activates the
-# moment the package appears.
-try:  # pragma: no cover - delta-spark absent in this container
-    from delta.tables import DeltaTable
-
-    HAS_DELTA = True
-except ImportError:
-    DeltaTable = None
-    HAS_DELTA = False
-
-
 class FeatureTable:
     def __init__(
         self,
@@ -77,7 +61,6 @@ class FeatureTable:
         name: str,
         pk: list[str],
         base: str | None = None,
-        use_delta: bool | None = None,
         keep_versions: int = 2,
     ):
         if "day" not in pk:
@@ -85,22 +68,21 @@ class FeatureTable:
         self.spark = spark
         self.name = name
         self.pk = pk
-        self.use_delta = HAS_DELTA if use_delta is None else (use_delta and HAS_DELTA)
-        # Retention horizon (parquet backend): committed versions kept
-        # per day partition. 2 = snapshot safety only (current + the
-        # one superseded); raise it to enable deeper time travel via
-        # read(version=...) — the Delta VACUUM-retention analogue.
+        # Retention horizon: committed versions kept per day partition.
+        # 2 = snapshot safety only (current + the one superseded); raise
+        # it to enable deeper time travel via read(version=...) — the
+        # Delta VACUUM-retention analogue.
         self.keep_versions = max(1, keep_versions)
         self.path = str(Path(base or DEFAULT_STORE) / name)
         self._lock_depth = 0
 
-    # -- versioned-layout plumbing (parquet backend) ------------------------
+    # -- versioned-layout plumbing -----------------------------------------
 
     def _writer_lock(self):
         """Enforce the documented single-writer-per-table assumption
-        LOUDLY (parquet backend): a `_WRITER_LOCK` file (pid written to
-        a temp file, os.link()'d into place — atomic publish, the lock
-        never exists without its pid) claimed for every mutation. A second
+        LOUDLY: a `_WRITER_LOCK` file (pid written to a temp file,
+        os.link()'d into place — atomic publish, the lock never exists
+        without its pid) claimed for every mutation. A second
         concurrent writer raises instead of interleaving version
         numbers / pointer flips into silent corruption. The lock
         records the holder pid; a lock whose holder is dead (crashed
@@ -339,15 +321,17 @@ class FeatureTable:
         per day (the VACUUM horizon — an in-flight reader's resolved
         snapshot survives at least keep_versions - 1 subsequent writes,
         and time travel reaches that far back); drop older versions,
-        plus unpointed dirs from crashed writes. The pointer is
-        rewritten (atomically) to exactly the surviving history so the
-        list and the dirs can't drift."""
+        plus unpointed dirs from crashed writes — a day that was never
+        committed at all goes whole. The pointer is rewritten
+        (atomically) to exactly the surviving history so the list and
+        the dirs can't drift."""
         import os
         import shutil
 
         for dd in self._day_dirs():
             hist = self._committed(dd)
             if not hist:
+                shutil.rmtree(dd, ignore_errors=True)
                 continue
             keep = hist[-max(1, self.keep_versions):]
             if keep != hist:
@@ -400,9 +384,7 @@ class FeatureTable:
         return committed
 
     def exists(self) -> bool:
-        return bool(self._resolved()) if not self.use_delta else (
-            Path(self.path).exists() and any(Path(self.path).rglob("*.parquet"))
-        )
+        return bool(self._resolved())
 
     def has_day(self, day) -> bool:
         """True if the day partition is COMPLETELY materialized — a
@@ -410,20 +392,14 @@ class FeatureTable:
         flip happens only after a successful write, so a merge that
         died mid-write leaves an unpointed v-dir and the next daily run
         redoes the day instead of silently freezing torn data in the
-        store. Under delta the txn log already guarantees readers never
-        see a torn write, so the check is a log-pruned 1-row read."""
-        if self.use_delta:
-            return self.exists() and bool(self.read(day).take(1))
+        store."""
         return self._day_str(day) in self._resolved(day)
 
-    def create(self, df: DataFrame) -> int | None:
+    def create(self, df: DataFrame) -> int:
         """Full (re)write, partitioned by day (S3 + partition pruning).
         Versioned: the new state lands as unpointed v-dirs first, then
         every pointer flips; days absent from `df` are retired. Returns
-        the committed version number (parquet backend)."""
-        if self.use_delta:
-            df.write.format("delta").mode("overwrite").partitionBy("day").save(self.path)
-            return None
+        the committed version number."""
         with self._writer_lock():
             n = self._next_version()
             self._write_version(df, n)
@@ -441,16 +417,7 @@ class FeatureTable:
         resolves to its latest committed version <= `version`; days
         first committed after it are absent. Reachable depth is the
         `keep_versions` retention horizon — `history()` lists what is
-        still on disk. Under delta the option maps to the native
-        `versionAsOf` (version numbers are Delta's own there)."""
-        if self.use_delta:
-            reader = self.spark.read.format("delta")
-            if version is not None:
-                reader = reader.option("versionAsOf", version)
-            df = reader.load(self.path)
-            if day is not None:
-                df = df.where(F.col("day") == F.lit(day))  # partition-pruned (S8)
-            return df
+        still on disk."""
         resolved = self._resolved(day, version)
         if not resolved:
             raise FileNotFoundError(
@@ -537,98 +504,61 @@ class FeatureTable:
             )
         )
 
-    def _merge_delta(self, batch: DataFrame) -> None:
-        """Transactional MERGE INTO keyed on the PK — the reference's
-        Delta write path (04a:612-630) verbatim: matched rows update
-        all columns, unmatched insert. The PK includes `day`, so the
-        txn touches only the partitions present in the batch (dynamic
-        file pruning on the join keys)."""
-        cond = " AND ".join(f"t.{k} = s.{k}" for k in self.pk)
-        (
-            DeltaTable.forPath(self.spark, self.path)
-            .alias("t")
-            .merge(batch.alias("s"), cond)
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def merge(self, batch: DataFrame, allow_new_columns: bool = False) -> int | None:
-        """Upsert on the PK (S5/S7). With delta-spark on the classpath
-        this is a transactional MERGE INTO; otherwise only the day
-        partitions present in the batch are rewritten: existing rows in
-        those partitions that don't collide on the PK survive via
-        anti-join, colliding rows are replaced by the batch
-        (whenMatchedUpdateAll semantics). Returns the committed version
-        number (parquet backend) — a valid read(version=...) target.
-        `allow_new_columns` = Delta autoMerge semantics (04c:156): the
-        batch may add columns; existing rows read NULL for them."""
-        if not self.exists():
-            return self.create(batch)
-        if self.use_delta:
-            if allow_new_columns:
-                # Session conf: save/restore around the MERGE (same
-                # pattern as partitionOverwriteMode in _write_version)
-                # so evolution stays opt-in PER CALL — leaking the conf
-                # would let every later merge drift schemas silently.
-                key = "spark.databricks.delta.schema.autoMerge.enabled"
-                prev = self.spark.conf.get(key, None)
-                self.spark.conf.set(key, "true")
-                try:
-                    self._merge_delta(batch)
-                finally:
-                    if prev is None:
-                        self.spark.conf.unset(key)
-                    else:
-                        self.spark.conf.set(key, prev)
-            else:
-                self._merge_delta(batch)
-            return None
-        # A lazily-built batch (e.g. the 300+-column feature aggregation)
-        # would otherwise be recomputed three times below (day-collect,
-        # anti-join key side, union write). Stage it to parquet rather
-        # than persist(DISK_ONLY): the staging write truncates the giant
-        # logical plan, so every downstream action is a flat columnar
-        # scan — the day-collect reads one column, the anti-join key side
-        # reads only the PK columns (column pruning a row-oriented persist
-        # can't do), and Catalyst never re-analyzes the feature tree.
-        # Unbounded batch (every household at 100 TB) sits on disk, not
-        # in executor memory.
-        import shutil
-
-        staging = self.path + "__STAGING"
-        with self._writer_lock():
-            batch.write.mode("overwrite").parquet(staging)
-            try:
-                staged = self.spark.read.parquet(staging)
-                days = [r[0] for r in staged.select("day").distinct().collect()]
-                merged = self._merge_frame(staged, days, allow_new_columns)
-                # New v-dirs only for the touched days; untouched history —
-                # and the live version dirs of the touched days themselves —
-                # stay on disk until the pointer flip commits.
-                n = self._next_version()
-                self._write_version(merged, n)
-                self._commit_version(n)
-                return n
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-
-    def _merge_frame(
-        self, batch: DataFrame, days, allow_new_columns: bool = False
-    ) -> DataFrame:
-        """Upserted content of the touched day partitions. No broadcast
-        hint on the batch side: it is unbounded (the full per-day feature
-        set at 100 TB), so the join strategy is AQE's call — it broadcasts
-        only when the key side actually fits the budget.
+    def merge(self, batch: DataFrame, allow_new_columns: bool = False) -> int:
+        """Upsert on the PK (S5/S7), writing the batch once. The batch
+        lands directly in the next version dir of every day it touches;
+        for days already in the store, the existing rows whose PK the
+        batch does not carry are appended to that same version
+        (whenMatchedUpdateAll + whenNotMatchedInsertAll semantics). The
+        version stays unpointed, and so invisible, until the pointer
+        flip, so a failure anywhere before it leaves the table as it
+        was. Returns the committed version number — a valid
+        read(version=...) target.
 
         `allow_new_columns` is Delta's schema.autoMerge analogue (the
         reference enables it so each model's MERGE can add one score
-        column, 04c:156): survivors take NULL for columns only the
-        batch has, and vice versa. Off by default — silent schema
-        drift should fail loudly unless opted into."""
-        existing = self.read().where(F.col("day").isin(days))
-        survivors = existing.join(batch.select(*self.pk), self.pk, "left_anti")
-        return survivors.unionByName(batch, allowMissingColumns=allow_new_columns)
+        column, 04c:156): the batch may add or omit columns, and rows
+        without a column read NULL for it. Off by default — a batch
+        whose column set differs from the table's raises before
+        anything is written, so schema drift fails loudly unless opted
+        into."""
+        if not self.exists():
+            return self.create(batch)
+        with self._writer_lock():
+            table = self.read()  # the pre-merge snapshot
+            drift = set(batch.columns) ^ set(table.columns)
+            if drift and not allow_new_columns:
+                raise ValueError(
+                    f"merge into {self.name}: columns {sorted(drift)} are not in "
+                    "both the batch and the table (allow_new_columns=True evolves "
+                    "the schema)"
+                )
+            n = self._next_version()
+            self._write_version(batch, n)
+            # Touched days already in the store: the live days that now
+            # hold a v=n dir — a listing, no scan. A new day needs no more.
+            upserted = [
+                d for d in self._resolved()
+                if (Path(self.path) / f"day={d}" / f"v={n}").exists()
+            ]
+            if upserted:
+                # The batch's PK read back from its version dirs (PK columns
+                # only). No broadcast hint: the batch is unbounded (the full
+                # per-day feature set at 100 TB), so the join strategy is
+                # AQE's call.
+                new_keys = (
+                    self.spark.read.option("basePath", self.path)
+                    .parquet(*[f"{self.path}/day={d}/v={n}" for d in upserted])
+                    .select(*self.pk)
+                )
+                survivors = table.where(F.col("day").isin(upserted)).join(
+                    new_keys, self.pk, "left_anti"
+                )
+                survivors.withColumn("v", F.lit(n)).write.mode("append").partitionBy(
+                    "day", "v"
+                ).parquet(self.path)
+            self._commit_version(n)
+            return n
 
     def compact(
         self,
@@ -652,34 +582,6 @@ class FeatureTable:
         sorts by the Morton interleaved key over ALL `sort_by` columns
         (io.zorder_key) so skipping works for filters on any of them;
         default is lexicographic (leading-column skipping only)."""
-        if self.use_delta:
-            if not self.has_day(day):
-                raise ValueError(f"no partition for day={day}")
-            # The Delta txn log owns the file layout — rewriting
-            # directories underneath it would orphan every logged file.
-            # OPTIMIZE is the transactional equivalent of the parquet
-            # rewrite below, scoped to the one partition. OSS Delta has
-            # no plain ORDER BY clustering, so ANY sort_by routes
-            # through ZORDER BY (for one column Z-order degenerates to
-            # a plain sort, so the data-skipping promise still holds);
-            # target_files does not apply — Delta sizes files via
-            # bin-packing table properties instead. Partition columns
-            # ('day') are dropped from the ZORDER list — Delta rejects
-            # Z-ordering on them (they're path-encoded constants inside
-            # the partition anyway); if nothing remains, plain OPTIMIZE.
-            zcols = [c for c in (sort_by or []) if c != "day"]
-            cols = ", ".join(f"`{c}`" for c in zcols)
-            clause = f" ZORDER BY ({cols})" if zcols else ""
-            self.spark.sql(
-                f"OPTIMIZE delta.`{self.path}` WHERE day = '{day}'{clause}"
-            )
-            return (
-                self.read(day)
-                .select(F.input_file_name())
-                .distinct()
-                .count()
-            )
-
         if not self.has_day(day):
             raise ValueError(f"no partition for day={day}")
         df = self.read(day).drop("day")  # day is path-encoded; restored by dir
@@ -802,8 +704,7 @@ class FeatureTable:
         until then. `purge_history=True` finishes the job for real
         erasure: every affected day's older version dirs are deleted
         and `_CURRENT` rewritten to just the new version (the Delta
-        analogue is DELETE + VACUUM(0); under delta only the DELETE
-        runs here — VACUUM is a retention-policied job).
+        analogue is DELETE + VACUUM(0)).
 
         Returns an audit dict: affected days, rows removed, committed
         version, purge flag."""
@@ -814,14 +715,6 @@ class FeatureTable:
         # coalesce: a NULL key is never "in values" — without it the
         # negation below would silently drop NULL-keyed rows too
         cond = F.coalesce(F.col(key_col).isin(values), F.lit(False))
-        if self.use_delta:
-            before = self.read().where(cond).count()
-            vals = ", ".join(repr(v) for v in values)
-            self.spark.sql(
-                f"DELETE FROM delta.`{self.path}` WHERE {key_col} IN ({vals})"
-            )
-            return {"days": None, "rows_removed": before, "version": None,
-                    "purged": False}
         import shutil
 
         cur = self.read()
@@ -866,27 +759,7 @@ class FeatureTable:
         import shutil
 
         if not Path(self.path).exists():
-            # fresh table: retention is a no-op on both backends (the
-            # Delta read below would otherwise throw on a missing path)
-            return []
-        if self.use_delta:
-            # Directory removal under a Delta table corrupts the log;
-            # route through the transactional DELETE instead. (VACUUM
-            # to reclaim the physical files is a separate retention-
-            # policied job — deliberately not run here.)
-            dropped = [
-                str(r[0])
-                for r in self.read()
-                .select("day")
-                .distinct()
-                .where(F.col("day") < F.lit(str(before_day)).cast("date"))
-                .collect()
-            ]
-            self.spark.sql(
-                f"DELETE FROM delta.`{self.path}` WHERE day < '{before_day}'"
-            )
-            return sorted(dropped)
-
+            return []  # fresh table: retention is a no-op
         dropped = []
         with self._writer_lock():
             for part in sorted(Path(self.path).glob("day=*")):

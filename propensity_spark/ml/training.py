@@ -312,9 +312,12 @@ def train_commodity_models(
     """Per-commodity training loop (04b:330-338) + manifest registry
     (M6). Each commodity trains inside try/except (04b:400-417): one
     bad category records a 'failed' manifest row instead of killing the
-    weekly job; healthy commodities still ship. Returns the manifest
-    DataFrame (commodity, model_path, metric_aupr, stage, n_trials) —
-    n_trials records the search breadth that produced the model.
+    weekly job; healthy commodities still ship. A commodity whose
+    training split holds one label class is not fitted: its row is
+    'skipped', with no model path and the reason in `error`. Returns
+    the manifest DataFrame (commodity, model_path, metric_aupr, stage,
+    n_trials) — n_trials records the search breadth that produced the
+    model.
 
     `eval_tables=True` additionally writes the decile-lift and
     calibration-reliability tables of each model's held-out test
@@ -376,6 +379,14 @@ def train_commodity_models(
         try:
             slice_df = ts.where(F.col("commodity_desc") == commodity).repartition(parts)  # P6
             train, test = slice_df.randomSplit([0.8, 0.2], seed=SEED)  # M2
+            # A binary classifier cannot learn from one label class (MLlib
+            # fits, then fails scoring on a length-1 rawPrediction): record
+            # the commodity as skipped, with no model for the scorer. An
+            # empty split (unknown commodity) still fails below.
+            if train.agg(F.countDistinct("purchased")).first()[0] == 1:
+                return (commodity, clean, None, None, "skipped", 0,
+                        "training split has 1 label class; "
+                        "a binary classifier needs both")
             est = make_pipeline(
                 feature_cols, tune=tune, model_type=model_type, search=search, n_trials=n_trials
             )
@@ -791,14 +802,16 @@ class ModelRegistry:
         out.write.mode("overwrite").parquet(self.path)
 
     def register(self, manifest: DataFrame) -> None:
-        """New versions enter in Staging (04b:424-428); failed training
-        rows keep their 'failed' stage for ops visibility."""
+        """New versions enter in Staging (04b:424-428); failed and
+        skipped training rows keep their stage for ops visibility."""
         new = manifest.select(
             "commodity_desc",
             "commodity_clean",
             "model_path",
             "metric_aupr",
-            F.when(F.col("stage") == "failed", "failed").otherwise("Staging").alias("stage"),
+            F.when(F.col("stage").isin("failed", "skipped"), F.col("stage"))
+            .otherwise("Staging")
+            .alias("stage"),
         )
         if Path(self.path).exists():
             current = self._read()

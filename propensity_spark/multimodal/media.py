@@ -273,19 +273,15 @@ def resize_rgb_nearest(pixels: bytes, w: int, h: int, out_w: int, out_h: int) ->
 
 def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     """Decode an image payload -> (width, height, maxval, pixels).
-    PPM and PNG decode with the real stdlib parsers above; other
-    compressed formats (JPEG/WebP) need PIL, which this container does
-    not ship."""
+    PPM and PNG decode with the real stdlib parsers above; any other
+    format (JPEG, WebP, ...) raises NotImplementedError."""
     if payload.startswith(b"P6"):
         return decode_ppm(payload)
     if payload.startswith(b"\x89PNG"):
         return decode_png(payload)
-    try:  # pragma: no cover - PIL absent in this container
-        from PIL import Image  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "JPEG/WebP image decoding requires PIL; container ships none"
-        ) from exc
+    raise NotImplementedError(
+        f"image decoding supports PPM (P6) and PNG only; got signature {payload[:4]!r}"
+    )
 
 
 def _extract_media_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

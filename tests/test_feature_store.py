@@ -4,6 +4,7 @@ parquet-backed FeatureTable (SURVEY.md §2.1 S5/S7/S8, §2.3 J7)."""
 import shutil
 import uuid
 from datetime import date
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +15,22 @@ from propensity_spark.feature_store import FeatureTable
 @pytest.fixture()
 def store(tmp_path):
     yield str(tmp_path / f"fs_{uuid.uuid4().hex[:6]}")
+
+
+@pytest.fixture()
+def parquet_writes(monkeypatch):
+    """Every DataFrameWriter.parquet call as (target path, frame)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    calls = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        calls.append((str(path), self._df))
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return calls
 
 
 def _frame(spark, day, keys, val):
@@ -83,15 +100,120 @@ def test_lookup_asof_keeps_key_with_only_later_features(spark, store):
     assert out == {(1, date(2024, 1, 3)): None, (2, date(2024, 1, 6)): None}
 
 
-def test_merge_does_not_broadcast_batch_side(spark, store):
-    """The incoming batch is unbounded at scale — its key side must not
-    carry a broadcast hint (AQE decides at runtime instead)."""
+def test_merge_does_not_broadcast_batch_side(spark, store, parquet_writes):
+    """The incoming batch is unbounded at scale — the batch key side of
+    the survivors anti-join must not carry a broadcast hint (AQE
+    decides at runtime instead)."""
     t = FeatureTable(spark, "hh", ["household_key", "day"], store)
     d = date(2024, 1, 1)
     t.create(_frame(spark, d, [1, 2], 1.0))
-    merged = t._merge_frame(_frame(spark, d, [2, 3], 9.0), [d])
-    analyzed = merged._jdf.queryExecution().analyzed().toString()
+    parquet_writes.clear()
+    t.merge(_frame(spark, d, [2, 3], 9.0))
+    _, survivors = parquet_writes[1]  # [0] is the batch itself
+    analyzed = survivors._jdf.queryExecution().analyzed().toString()
+    assert "LeftAnti" in analyzed
     assert "ResolvedHint" not in analyzed and "broadcast" not in analyzed.lower()
+
+
+def test_new_day_merge_writes_the_batch_once(spark, store, parquet_writes):
+    """A merge of a day the store does not hold writes the batch once,
+    straight into the table's new version — no staging copy."""
+    t = FeatureTable(spark, "hh", ["household_key", "day"], store)
+    t.create(_frame(spark, date(2024, 1, 1), [1, 2], 1.0))
+    parquet_writes.clear()
+    v = t.merge(_frame(spark, date(2024, 1, 2), [1, 2, 3], 2.0))
+    assert [path for path, _ in parquet_writes] == [t.path]
+    assert not any(p.name.endswith("STAGING") for p in Path(store).iterdir())
+    assert t.history()["2024-01-02"] == [v]
+    assert t.read(date(2024, 1, 2)).count() == 3
+
+
+def test_merge_mixed_batch_upserts_existing_day_and_inserts_new(
+    spark, store, parquet_writes
+):
+    """One batch spanning a stored day and a new day: on the stored day
+    matched rows are replaced and the others survive, the new day is
+    inserted, and both land in ONE version — the batch write plus one
+    survivor append into the same version dirs."""
+    t = FeatureTable(spark, "hh", ["household_key", "day"], store)
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    v0 = t.create(_frame(spark, d1, [1, 2, 3], 1.0))
+    parquet_writes.clear()
+    v = t.merge(_frame(spark, d1, [2, 4], 9.0).unionByName(_frame(spark, d2, [1], 5.0)))
+    rows = {(r["household_key"], r["day"]): r["amount"] for r in t.read().collect()}
+    assert rows == {
+        (1, d1): 1.0,
+        (2, d1): 9.0,
+        (3, d1): 1.0,
+        (4, d1): 9.0,
+        (1, d2): 5.0,
+    }
+    assert t.history() == {"2024-01-01": [v0, v], "2024-01-02": [v]}
+    assert [path for path, _ in parquet_writes] == [t.path, t.path]
+    assert t.validate()["duplicate_pk"] == 0
+
+
+def test_merge_failure_before_survivor_append_leaves_table_unchanged(
+    spark, store, monkeypatch
+):
+    """A merge killed after the batch landed in its version dirs but
+    before the survivors were appended commits nothing: reads and
+    history are the pre-merge snapshot, and the next merge succeeds
+    and garbage-collects the leftovers — including the dir of a day
+    that was never committed."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = FeatureTable(spark, "hh", ["household_key", "day"], store)
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    t.create(_frame(spark, d1, [1, 2], 1.0))
+    before_rows = sorted(tuple(r) for r in t.read().collect())
+    before_hist = t.history()
+
+    real_mode = DataFrameWriter.mode
+
+    def mode(self, save_mode):
+        if save_mode == "append":
+            raise RuntimeError("killed before the survivor append")
+        return real_mode(self, save_mode)
+
+    monkeypatch.setattr(DataFrameWriter, "mode", mode)
+    with pytest.raises(RuntimeError, match="survivor append"):
+        t.merge(_frame(spark, d1, [2], 9.0).unionByName(_frame(spark, d2, [1], 5.0)))
+    monkeypatch.undo()
+    leftovers = sorted(Path(t.path).glob("day=*/v=*"))
+    assert len(leftovers) == 3  # v0 of d1 plus the batch's two unpointed dirs
+    assert sorted(tuple(r) for r in t.read().collect()) == before_rows
+    assert t.history() == before_hist
+    assert not t.has_day(d2)
+
+    v = t.merge(_frame(spark, d1, [2], 7.0))
+    rows = {r["household_key"]: r["amount"] for r in t.read().collect()}
+    assert rows == {1: 1.0, 2: 7.0}
+    assert t.history()["2024-01-01"][-1] == v
+    assert not (Path(t.path) / f"day={d2}").exists()
+    assert sorted(Path(t.path).glob("day=*/v=*")) == [
+        Path(t.path) / f"day={d1}" / f"v={n}" for n in t.history()["2024-01-01"]
+    ]
+
+
+def test_strict_merge_rejects_schema_drift_before_writing(spark, store):
+    """Without allow_new_columns a batch that adds or lacks a column
+    raises before anything is written: no version dir, no commit."""
+    t = FeatureTable(spark, "hh", ["household_key", "day"], store)
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    v0 = t.create(_frame(spark, d1, [1, 2], 1.0))
+    widened = spark.createDataFrame(
+        [(1, d2, 5.0, 0.9)], "household_key int, day date, amount double, score double"
+    )
+    narrowed = spark.createDataFrame([(1, d1)], "household_key int, day date")
+    for batch in (widened, narrowed):
+        with pytest.raises(ValueError, match="allow_new_columns"):
+            t.merge(batch)
+    assert t.history() == {"2024-01-01": [v0]}
+    assert sorted(Path(t.path).glob("day=*")) == [Path(t.path) / f"day={d1}"]
+    assert sorted(Path(t.path).glob("day=*/v=*")) == [
+        Path(t.path) / f"day={d1}" / f"v={v0}"
+    ]
 
 
 def test_merge_restores_partition_overwrite_mode(spark, store):
@@ -208,35 +330,6 @@ def test_expire_drops_only_old_partitions(spark, store):
     assert dropped == ["2024-01-01"]
     remaining = {str(r["day"]) for r in t.read().select("day").distinct().collect()}
     assert remaining == {"2024-01-15", "2024-02-01"}
-
-
-def test_parquet_fallback_flag_off(spark, store):
-    """use_delta=True without delta-spark on the classpath must degrade
-    to the parquet path, not crash."""
-    from propensity_spark.feature_store import HAS_DELTA
-
-    t = FeatureTable(spark, "hh_d0", ["household_key", "day"], store, use_delta=True)
-    assert t.use_delta == HAS_DELTA  # False in this container
-    d = date(2024, 1, 1)
-    t.create(_frame(spark, d, [1], 1.0))
-    assert t.has_day(d)
-
-
-@pytest.mark.skipif(
-    not __import__("propensity_spark.feature_store", fromlist=["HAS_DELTA"]).HAS_DELTA,
-    reason="delta-spark not on the classpath (activates when it appears; "
-    "install impossibility proof: docs/DELTA.md)",
-)
-def test_delta_merge_upserts_transactionally(spark, store):
-    """Same upsert semantics as the parquet path, via MERGE INTO."""
-    t = FeatureTable(spark, "hh_delta", ["household_key", "day"], store, use_delta=True)
-    assert t.use_delta
-    d = date(2024, 1, 1)
-    t.create(_frame(spark, d, [1, 2, 3], 10.0))
-    t.merge(_frame(spark, d, [2, 3, 4], 99.0))
-    got = {r["household_key"]: r["amount"] for r in t.read(d).collect()}
-    assert got == {1: 10.0, 2: 99.0, 3: 99.0, 4: 99.0}
-    assert t.has_day(d) and not t.has_day(date(2030, 1, 1))
 
 
 def test_compact_sort_by_enables_data_skipping(spark, tmp_path):
@@ -741,43 +834,6 @@ def test_forget_without_purge_keeps_time_travel_then_gc(spark, store):
     old = {r["household_key"] for r in t.read(version=v0).collect()}
     assert old == {1, 2}  # history intact until retention GC
     assert audit["version"] > v0
-
-
-def test_delta_automerge_conf_saved_and_restored(spark, store):
-    """The delta MERGE path must scope schema.autoMerge.enabled to the
-    single call (VERDICT r05 #3): set during the merge, restored to
-    the prior value (or unset) after, even when the merge raises —
-    otherwise every LATER merge silently allows schema drift. The
-    delta engine itself is absent here, so _merge_delta is stubbed;
-    the conf discipline is what this pins."""
-    key = "spark.databricks.delta.schema.autoMerge.enabled"
-    t = FeatureTable(spark, "dl", ["household_key", "day"], store)
-    t.use_delta = True
-    t.exists = lambda: True
-    seen = {}
-    t._merge_delta = lambda batch: seen.update(
-        during=spark.conf.get(key, None)
-    )
-    batch = _frame(spark, date(2024, 1, 1), [1], 1.0)
-
-    # previously unset -> set to true during, unset again after
-    assert spark.conf.get(key, None) is None
-    t.merge(batch, allow_new_columns=True)
-    assert seen["during"] == "true"
-    assert spark.conf.get(key, None) is None
-
-    # previously false -> restored to false after, even on failure
-    spark.conf.set(key, "false")
-    try:
-        def boom(batch):
-            raise RuntimeError("merge failed mid-flight")
-
-        t._merge_delta = boom
-        with pytest.raises(RuntimeError, match="mid-flight"):
-            t.merge(batch, allow_new_columns=True)
-        assert spark.conf.get(key, None) == "false"
-    finally:
-        spark.conf.unset(key)
 
 
 def test_writer_lock_rejects_live_concurrent_writer(spark, store):

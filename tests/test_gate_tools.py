@@ -166,6 +166,34 @@ def test_compute_rotation_rejects_head_that_crowds_out_stale_entries(tmp_path):
         compute_rotation(names, upto_round=5, head=names[60:66], repo=tmp_path)
 
 
+def test_propose_rotation_refuses_a_head_already_verified(
+    tmp_path, monkeypatch, capsys
+):
+    """`--propose` builds next round's gate from GATE_PRIORITY_HEAD. A
+    head whose entries all have a driver row in the newest round is
+    last round's touched list: it exits 1 instead of printing a gate.
+    One head entry missing from that round is enough to propose."""
+    import __spark_entry__ as e
+    from tools.gate_lint import propose_rotation
+
+    names = list(e.queries())
+    head = names[:3]
+    monkeypatch.setattr(e, "GATE_PRIORITY_HEAD", head)
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({n: {} for n in names}))
+    newest = tmp_path / "CORRECTNESS_r02.json"
+
+    newest.write_text(json.dumps({n: {} for n in head}))
+    assert propose_rotation(repo=tmp_path) == 1
+    out = capsys.readouterr()
+    assert "r02" in out.err and "GATE_PRIORITY_HEAD" in out.err and out.out == ""
+
+    newest.write_text(json.dumps({n: {} for n in head[:2]}))
+    assert propose_rotation(repo=tmp_path) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert lines[0] == "# GATE_ROTATION_ROUND = 3"
+    assert [ln.split('"')[1] for ln in lines[2:5]] == head
+
+
 def test_scale_run_reports_rows_exponent_flags_and_split(spark):
     """tools/scale_run.py, the one per-query timing loop: a two-dir run
     reports rows equal to a direct count, the exponent over the parsed

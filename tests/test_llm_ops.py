@@ -89,6 +89,21 @@ def test_decode_stub_deterministic():
     assert (w, h, f) == (16 + 1000 % 624, 16 + 7000 % 464, 1 + 1000 % 24)
 
 
+def test_decode_image_rejects_unsupported_formats():
+    """Only PPM and PNG decode: a JPEG (or any other) signature raises
+    NotImplementedError instead of returning nothing for the caller to
+    unpack."""
+    import pytest
+
+    from propensity_spark.multimodal.media import decode_image
+
+    jpeg = b"\xff\xd8\xff\xe0\x00\x10JFIF\x00"
+    webp = b"RIFF\x00\x00\x00\x00WEBP"
+    for payload in (jpeg, webp, b""):
+        with pytest.raises(NotImplementedError, match="PPM"):
+            decode_image(payload)
+
+
 def test_ppm_codec_roundtrip_and_real_decode():
     """The PPM path is a REAL byte codec: encode -> decode is identity,
     the parser handles comments and multi-digit dims per the netpbm

@@ -428,6 +428,52 @@ def test_cli_init_and_daily_dispatch(spark, sf_dir, tmp_path):
     assert run(args, spark=spark) == 0
 
 
+def test_cli_one_class_commodity_is_skipped_not_failed(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A commodity whose training split holds a single label class is
+    recorded as skipped (no model, reason in `error`) instead of failing
+    its fit: the healthy commodity still reaches Production, and both
+    `init` and the `daily` that scores with the manifest exit 0."""
+    from propensity_spark.__main__ import build_parser, run
+    from propensity_spark.ml import training as M
+    from propensity_spark.pipeline import Pipeline
+
+    ratios = M.q_class_ratios(spark, sf_dir).where(F.col("purchased") == 1)
+    healthy, planted = sorted(r[0] for r in ratios.select("commodity_desc").collect())[:2]
+    real_build = M.build_training_set
+
+    def one_class_build(*args, **kwargs):
+        ts, cols = real_build(*args, **kwargs)
+        label = F.when(F.col("commodity_desc") == planted, F.lit(0)).otherwise(
+            F.col("purchased")
+        )
+        return ts.withColumn("purchased", label.cast(ts.schema["purchased"].dataType)), cols
+
+    monkeypatch.setattr(M, "build_training_set", one_class_build)
+    base = str(tmp_path / "cli_one_class")
+    ap = build_parser()
+    args = ap.parse_args(
+        ["init", "--sf-dir", sf_dir, "--base", base, "--backfill-days", "0",
+         "--commodities", "2", "--model-type", "lr"]
+    )
+    assert run(args, spark=spark) == 0
+    p = Pipeline(spark, sf_dir, base)
+    rows = {
+        r["commodity_desc"]: r
+        for r in spark.read.parquet(str(p.base / "manifest")).collect()
+    }
+    assert rows[healthy]["stage"] == "Production" and rows[healthy]["model_path"]
+    skipped = rows[planted]
+    assert skipped["stage"] == "skipped" and skipped["model_path"] is None
+    assert "1 label class" in skipped["error"]
+
+    args = ap.parse_args(["daily", "--sf-dir", sf_dir, "--base", base])
+    assert run(args, spark=spark) == 0
+    scored = p.read_published("unpivoted").select("commodity_desc").distinct()
+    assert {r[0] for r in scored.collect()} == {healthy}
+
+
 def test_cli_daily_reruns_after_killed_writes(spark, sf_dir, tmp_path):
     """A `daily` killed mid-write leaves only `_temporary/` under the
     manifest and the day's training-set stage. A re-run must treat both

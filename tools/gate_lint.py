@@ -178,15 +178,27 @@ def sweep_spark_negzero(name: str, sdf, problems: list[str]) -> None:
         )
 
 
-def propose_rotation() -> int:
+def propose_rotation(repo: Path = REPO) -> int:
     """Print the next round's DRIVER_GATE_PRIORITY (current
-    GATE_PRIORITY_HEAD first, then oldest-first)."""
+    GATE_PRIORITY_HEAD first, then oldest-first). Refuses with exit 1
+    while every head entry already has a driver row in the newest round:
+    such a head is the last round's touched list, already verified, and
+    must be replaced by this round's before the gate is built."""
     import __spark_entry__ as e
 
-    latest, newest_round = driver_history(REPO)
+    latest, newest_round = driver_history(repo)
     names = list(e.queries())
     head = getattr(e, "GATE_PRIORITY_HEAD", ())
-    gate = compute_rotation(names, upto_round=newest_round + 1, head=head)
+    if head and all(latest.get(n) == newest_round for n in head):
+        print(
+            f"--propose: all {len(head)} GATE_PRIORITY_HEAD entries were "
+            f"driver-verified in r{newest_round:02d}, the newest round, so the "
+            "head is last round's touched list; set it to the entries this "
+            "round changed, then re-run",
+            file=sys.stderr,
+        )
+        return 1
+    gate = compute_rotation(names, upto_round=newest_round + 1, head=head, repo=repo)
     print(f"# GATE_ROTATION_ROUND = {newest_round + 1}")
     print("DRIVER_GATE_PRIORITY = [")
     for n in gate:
