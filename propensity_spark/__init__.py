@@ -8,8 +8,6 @@ Public API:
     register_views()      reference-named SQL views (raw + derived +
                           published; superset of io.register_views)
     FeatureTable          versioned feature store (MERGE / lookup / as-of)
-    Pipeline              init / daily / weekly orchestration
-    train_commodity_models, score_batch
 """
 
 from propensity_spark.session import get_spark  # noqa: F401

@@ -4,10 +4,10 @@ The reference ingests CSVs with schema inference and writes Delta tables
 (01_Data_Prep.py:56-82). Our engine reads the driver's parquet fixtures
 with their embedded schemas and offers explicit-schema CSV/JSON readers
 for production paths (inferSchema is banned on correctness-checked
-paths, SURVEY.md §1). Delta is not on the classpath in this image, so
-the managed-table surface (overwrite / append / merge / insert-overwrite
-promotion) is implemented over parquet `saveAsTable` with a documented
-MERGE fallback in feature_store.py.
+paths, SURVEY.md §1). The managed-table writes live over parquet
+where they are used: overwrite, append and merge in feature_store.py
+(`FeatureTable.create` / `merge`), insert-overwrite promotion in
+`Pipeline._promote`.
 """
 
 from __future__ import annotations
@@ -287,10 +287,6 @@ def _normalize_ts(dtype: T.DataType):
     return F.col("ts")
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for the SQL API."""
     for name in TABLES:
@@ -303,11 +299,6 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     require a StructType — inference double-scans the data and can
     flip types between runs."""
     return spark.read.csv(path, header=True, schema=schema)
-
-
-def read_csv_inferred(spark: SparkSession, path: str) -> DataFrame:
-    """Reference-parity CSV scan (01_Data_Prep.py:56-64). Bronze-only."""
-    return spark.read.csv(path, header=True, inferSchema=True)
 
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -335,33 +326,6 @@ def read_csv_capturing_corrupt(
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path, header=True, schema=full)
     )
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Parquet table write (S3/S4 stand-in for Delta overwrite/append).
-
-    `partition_by` gives partition pruning on the named columns — at
-    100 TB, feature tables are partitioned by `day` so point-in-time
-    reads touch one partition (SURVEY.md §4 pushdown row).
-    """
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def insert_overwrite(spark: SparkSession, src_path: str, dst_path: str) -> None:
-    """Atomic-ish promotion of a staged table to prod (S11 semantics,
-    04c_Task__Propensity_Estimation.py:248-249): read staged parquet,
-    rewrite the destination. With Delta on the classpath this becomes
-    `INSERT OVERWRITE`; the parquet fallback rewrites the directory."""
-    df = spark.read.parquet(src_path)
-    df.write.mode("overwrite").parquet(dst_path)
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 16):

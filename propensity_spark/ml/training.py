@@ -38,11 +38,7 @@ from pyspark.sql import functions as F
 
 from propensity_spark.feature_store import DEFAULT_STORE, FeatureTable
 from propensity_spark.io import committed
-from propensity_spark.operators.features import (
-    q_commodity_features,
-    q_household_commodity_features,
-    q_household_features,
-)
+from propensity_spark.operators.features import GRAINS
 from propensity_spark.operators.relational import q_class_ratios, q_labels
 from propensity_spark.session import run_overlapped
 
@@ -50,57 +46,21 @@ SEED = 42
 
 
 def build_training_set(
-    spark: SparkSession,
-    sf_dir: str,
-    store_base: str,
-    materialize: bool = True,
-    day=None,
+    spark: SparkSession, sf_dir: str, store_base: str, day
 ) -> tuple[DataFrame, list[str]]:
     """M1: labels + three exact-key feature lookups with rename
-    prefixes (04b:195-217, 04b:353-358). Feature tables are written
-    (day-stamped) to the feature store first, then looked up — the
-    same round-trip the reference makes through the FS. Pass
-    ``materialize=False`` when the store was already populated (the
-    pipeline engineers features ONCE; training and scoring both look
-    up from that store instead of recomputing)."""
-    day_str = str(day or "2024-01-01")
+    prefixes (04b:195-217, 04b:353-358). Only looks up: the features of
+    `day` must already be in the store at `store_base`, where
+    `Pipeline.engineer_features` / `Pipeline.backfill` put them (the
+    reference's training reads only through FeatureLookup; only the
+    feature job writes). A missing table raises FileNotFoundError; a
+    key with no feature row for `day` gets 0.0 features."""
+    day_str = str(day)
     stage = Path(store_base) / "training_set" / f"day={day_str}"
-    day = F.lit(day_str).cast("date")
-    hh = FeatureTable(spark, "household", ["household_key", "day"], store_base)
-    cm = FeatureTable(spark, "commodity", ["commodity_desc", "day"], store_base)
-    hc = FeatureTable(
-        spark, "household_commodity", ["household_key", "commodity_desc", "day"], store_base
-    )
-    if materialize or not committed(stage):
-        if materialize or not hc.exists():
-            # Overlap the three independent grain builds (guide §2.6):
-            # each grain's partial-aggregation map side is scan-fused
-            # above the facts (a serial segment on row-group-starved
-            # layouts), so sequential creates leave the session idle
-            # through each other's tails. The tables are distinct paths
-            # with per-table writer locks — no shared state, results
-            # unchanged.
-            run_overlapped(
-                spark,
-                [
-                    lambda: hh.create(
-                        q_household_features(spark, sf_dir).withColumn("day", day)
-                    ),
-                    lambda: cm.create(
-                        q_commodity_features(spark, sf_dir).withColumn("day", day)
-                    ),
-                    lambda: hc.create(
-                        q_household_commodity_features(spark, sf_dir).withColumn(
-                            "day", day
-                        )
-                    ),
-                ],
-            )
-
-        labels = q_labels(spark, sf_dir).withColumn("day", day)
-        ts = hh.lookup(labels, "household")
-        ts = cm.lookup(ts, "commodity")
-        ts = hc.lookup(ts, "household_commodity")
+    if not committed(stage):
+        ts = q_labels(spark, sf_dir).withColumn("day", F.lit(day_str).cast("date"))
+        for name, keys in GRAINS:
+            ts = FeatureTable(spark, name, keys + ["day"], store_base).lookup(ts, name)
         feature_cols = [c for c in ts.columns if "__" in c]
         # left-outer lookups can miss (e.g. a household with no history):
         # reference fills 0.0 at feature build; we fill at assembly too.
@@ -300,10 +260,10 @@ def train_commodity_models(
     sf_dir: str,
     commodities: list[str] | int | None = None,
     tune: bool = False,
-    store_base: str | None = None,
+    *,
+    store_base: str,
+    day,
     models_base: str | None = None,
-    materialize_features: bool = True,
-    day=None,
     model_type: str = "gbt",
     search: str = "grid",
     n_trials: int = N_SEARCH_TRIALS,
@@ -317,21 +277,19 @@ def train_commodity_models(
     'skipped', with no model path and the reason in `error`. Returns
     the manifest DataFrame (commodity, model_path, metric_aupr, stage,
     n_trials) — n_trials records the search breadth that produced the
-    model.
+    model. The training set is looked up from the features of `day` in
+    the store at `store_base` (build_training_set); this never writes
+    features.
 
     `eval_tables=True` additionally writes the decile-lift and
     calibration-reliability tables of each model's held-out test
     split to `<model_path>__eval/{lift,reliability}` — reuses the one
     test-set transform the AUPR evaluation already runs, so the only
     extra cost is two tiny (n_bins-row) writes per commodity."""
-    store_base = store_base or str(DEFAULT_STORE / "training")
-    # Models live UNDER the run's store dir: per-run isolation (two
-    # concurrent runs never collide on model paths) and the caller's
+    # Models default to UNDER the run's store dir: the caller's
     # cleanup of store_base removes them for free.
     models_base = models_base or str(Path(store_base) / "models")
-    ts, feature_cols = build_training_set(
-        spark, sf_dir, store_base, materialize=materialize_features, day=day
-    )
+    ts, feature_cols = build_training_set(spark, sf_dir, store_base, day)
 
     ratios = (
         q_class_ratios(spark, sf_dir)
@@ -705,10 +663,9 @@ def cross_validate(
     (one 1-row agg per fold — bounded, C4-style), never from the
     held-out slice. Each of the k fits is a fully distributed MLlib
     job; the input is persisted DISK-spillable for the k passes and
-    unpersisted before return (at 100 TB, pre-materialize the
-    assembled training set to parquet instead — build_training_set
-    already supports materialize=True — and the persist here is a
-    cheap no-op on top of the parquet scan).
+    unpersisted before return (at 100 TB, pass the parquet-staged set
+    build_training_set returns, and the persist here is a cheap no-op
+    on top of that scan).
 
     Returns a k-row DataFrame (fold, n_train, n_test, aupr,
     balanced_accuracy, mcc) — aggregate mean/std downstream."""
@@ -874,15 +831,23 @@ def q_train_score_propensity(spark: SparkSession, sf_dir: str) -> DataFrame:
     transfer O(commodities) — at 100 TB the per-household scores stay
     distributed (score_batch writes them table-side). The collect is
     required: the result must materialize before `finally` deletes the
-    model/feature store."""
-    run = uuid.uuid4().hex[:8]
-    store_base = str(DEFAULT_STORE / f"ml_{run}")
+    model/feature store.
+
+    Features reach the store the one way the pipeline writes them
+    (`engineer_features` at the latest fact day, the anchor of the
+    standalone feature queries); training and scoring both look up
+    that day (J8: the same store round-trip, zero recomputation)."""
+    # function-level import: pipeline imports this module
+    from propensity_spark.operators.relational import fact_days
+    from propensity_spark.pipeline import Pipeline
+
+    base = DEFAULT_STORE / f"ml_{uuid.uuid4().hex[:8]}"
     try:
-        manifest = train_commodity_models(spark, sf_dir, commodities=2, store_base=store_base)
-        # scoring reuses the feature tables training just wrote (J8: the
-        # same store round-trip, zero recomputation)
-        ts, _ = build_training_set(spark, sf_dir, store_base, materialize=False)
-        scores = score_batch(spark, ts, manifest)
+        p = Pipeline(spark, sf_dir, str(base))
+        day = fact_days(spark, sf_dir).agg(F.max("day")).first()[0]
+        p.engineer_features(day)
+        manifest = p.run_weekly(2, day=day)
+        scores = p.score(manifest, day)
         scored = scores.groupBy("commodity_desc").agg(
             F.count(F.lit(1)).alias("n"),
             (
@@ -908,7 +873,7 @@ def q_train_score_propensity(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = out.collect()  # O(commodities), not O(households)
         return spark.createDataFrame(rows, out.schema)
     finally:
-        shutil.rmtree(store_base, ignore_errors=True)
+        shutil.rmtree(base, ignore_errors=True)
 
 
 QUERIES = {"train_score_propensity": q_train_score_propensity}

@@ -1,6 +1,6 @@
 """Multimodal column handling (extension scope, SURVEY.md §7):
 image/audio/video as opaque BINARY payloads + typed metadata, with
-decode / feature-extract / resize / frame-sample implemented as
+decode / feature-extract / resize implemented as
 Arrow-batched Pandas functions over ``mapInPandas``.
 
 Two REAL stdlib codecs carry the pixel path: a full P6 PPM parser
@@ -322,18 +322,6 @@ def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.mapInPandas(_extract_media_meta, schema=MEDIA_SCHEMA)
 
 
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling plumbing: explode a deterministic frame index per
-    media row (every 5th fake frame) — the shape a video pipeline uses
-    before per-frame feature extraction."""
-    meta = q_media_metadata(spark, sf_dir)
-    return meta.select(
-        "doc_id",
-        "n_frames",
-        F.explode(F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(5))).alias("frame_idx"),
-    )
-
-
 # Synthetic PPM geometry: w in [4, 63], h in [4, 47] keeps per-doc pixel
 # volume bounded (<9 KiB) while exercising non-square dims and multi-digit
 # header widths. RESIZE_SMALL is the thumbnail edge for the resize leg.
@@ -365,25 +353,6 @@ def synth_pixels(text_bytes: bytes) -> tuple[int, int, bytes]:
 def synth_ppm_payload(text_bytes: bytes) -> bytes:
     """Deterministic real PPM payload (see synth_pixels)."""
     return encode_ppm(*synth_pixels(text_bytes))
-
-
-def synthesize_ppm_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, payload BINARY, mime): real P6 PPM
-    payloads built in an Arrow-batched worker. Map-only."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        synth_ppm_payload((t or "").encode("utf-8")) for t in pdf["text"]
-                    ],
-                    "mime": "image/x-portable-pixmap",
-                }
-            )
-
-    return docs.mapInPandas(synth, schema="doc_id bigint, payload binary, mime string")
 
 
 def synthesize_media(docs: DataFrame) -> DataFrame:

@@ -55,6 +55,16 @@ from propensity_spark.operators.relational import (
 
 WINDOWS: list[tuple[str, int]] = [("30d", 30), ("60d", 60), ("90d", 90), ("1yr", 365)]
 
+# The three feature-store grains (04a:573-595, 655-677, 729-751) as
+# (table name, group keys); each table's PK is its keys plus `day`. The
+# pipeline writes them and training looks them up in this order, which
+# fixes the training set's feature column order.
+GRAINS: list[tuple[str, list[str]]] = [
+    ("household", ["household_key"]),
+    ("commodity", ["commodity_desc"]),
+    ("household_commodity", ["household_key", "commodity_desc"]),
+]
+
 _MONEY = [
     "amount_list",
     "instore_discount",

@@ -231,17 +231,6 @@ LINKAGE_SQL = f"""
       ON a.block = b.block AND a.name < b.name
     WHERE levenshtein(a.name, b.name) <= {LINKAGE_MAX_DIST}
 """
-def ri_orphans(
-    child: DataFrame, parent: DataFrame, fk: str, pk: str
-) -> DataFrame:
-    """Rows of `child` whose `fk` has no match in `parent.pk` — a
-    left-anti join, the orphan half of a referential-integrity audit.
-    Plans as a broadcast anti-join when the parent key set is small;
-    at scale the bloom-filter reduction (operators/extended.
-    q_bloom_semijoin) pre-filters before the exact anti-join."""
-    return child.join(
-        parent.select(F.col(pk).alias(fk)).distinct(), fk, "left_anti"
-    )
 
 
 def q_ri_check(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -72,11 +72,12 @@ class Pipeline:
     # -- daily ------------------------------------------------------------
 
     def _grain_specs(self, asof=None):
-        """(table name, PK, silver-shaped source, group keys) for the
-        three feature grains — the ONE place the grain list lives, so
-        the daily path and the multi-anchor backfill cannot drift.
-        `asof` (a day Column predicate) restricts the fact scan."""
-        from propensity_spark.operators.features import _with_commodity
+        """(feature table, silver-shaped source, group keys) for each of
+        `GRAINS`, so the daily path and the multi-anchor backfill cannot
+        drift. A grain keyed on commodity reads silver joined to the
+        brand dim. `asof` (a day Column predicate) restricts the fact
+        scan."""
+        from propensity_spark.operators.features import GRAINS, _with_commodity
         from propensity_spark.operators.relational import silver_transactions
 
         silver = silver_transactions(self.spark, self.sf_dir)
@@ -85,17 +86,15 @@ class Pipeline:
             silver = silver.where(asof)
             with_comm = with_comm.where(asof)
         return [
-            ("household", ["household_key", "day"], silver, ["household_key"]),
-            ("commodity", ["commodity_desc", "day"], with_comm, ["commodity_desc"]),
             (
-                "household_commodity",
-                ["household_key", "commodity_desc", "day"],
-                with_comm,
-                ["household_key", "commodity_desc"],
-            ),
+                FeatureTable(self.spark, name, keys + ["day"], self.store),
+                with_comm if "commodity_desc" in keys else silver,
+                keys,
+            )
+            for name, keys in GRAINS
         ]
 
-    def engineer_features(self, day, force: bool = False) -> None:
+    def engineer_features(self, day) -> None:
         """04a equivalent: build all three grains for `day` and MERGE
         them into the feature store (PK includes day, 04a:599).
 
@@ -111,20 +110,20 @@ class Pipeline:
         Idempotent per day: a day whose partition is already
         materialized is skipped (metadata check, no scan) — so
         init-backfill followed by the daily job computes each grid
-        exactly once. `force=True` recomputes (source-data revision)."""
+        exactly once, and a day's features never change under the
+        training set staged from them."""
         from propensity_spark.operators.features import _spark_features
 
         stamp = F.lit(day).cast("date")
 
         def _one(spec):
-            name, pk, src, keys = spec
-            table = FeatureTable(self.spark, name, pk, self.store)
-            if not force and table.has_day(day):
-                return name, None
+            table, src, keys = spec
+            if table.has_day(day):
+                return table.name, None
             table.merge(_spark_features(src, keys).withColumn("day", stamp))
             # post-merge expectations on the freshly written day only
             # (pruned read): a broken column is caught the run it lands
-            return name, table.validate(day, expectations=self.feature_expectations)
+            return table.name, table.validate(day, expectations=self.feature_expectations)
 
         # The three grains are independent tables (distinct paths,
         # per-table writer locks): overlap their merge+validate rounds
@@ -141,7 +140,7 @@ class Pipeline:
         )
         self.last_validation = {n: v for n, v in results if v is not None}
 
-    def backfill(self, days, force: bool = False) -> None:
+    def backfill(self, days) -> None:
         """One-pass multi-anchor backfill of all three grains
         (multi_day_features): ONE scan of the facts and one shared
         (keys, anchor) aggregation per grain for the whole day list,
@@ -153,9 +152,8 @@ class Pipeline:
         from propensity_spark.operators.features import multi_day_features
 
         def _one(spec):
-            name, pk, src, keys = spec
-            table = FeatureTable(self.spark, name, pk, self.store)
-            todo = [d for d in days if force or not table.has_day(d)]
+            table, src, keys = spec
+            todo = [d for d in days if not table.has_day(d)]
             if todo:
                 table.merge(multi_day_features(src, keys, todo))
 
@@ -171,17 +169,15 @@ class Pipeline:
         Looks up the features engineer_features already merged for
         `day` — no recomputation (contrast the reference, which routes
         through fs.score_batch doing the same lookup, 04c:181-186)."""
-        ts, _ = build_training_set(
-            self.spark, self.sf_dir, self.store, materialize=False, day=day
-        )
+        ts, _ = build_training_set(self.spark, self.sf_dir, self.store, day)
         return score_batch(self.spark, ts, manifest).withColumn(
             "day", F.lit(day).cast("date")
         )
 
     def publish(self, scores: DataFrame) -> tuple[str, str]:
-        """04c:124-286: stage pivoted + unpivoted score tables, then
-        promote atomically (write temp, then INSERT-OVERWRITE-style
-        swap). Pivot is ONE shuffle (M8) instead of N MERGEs.
+        """04c:124-286: promote the pivoted and unpivoted score tables
+        (INSERT-OVERWRITE-style, one write each). Pivot is ONE shuffle
+        (M8) instead of N MERGEs.
 
         Both published tables are partitioned by ``day`` with DYNAMIC
         partition overwrite: a daily run replaces only the day(s) it
@@ -222,24 +218,18 @@ class Pipeline:
         return paths
 
     def _promote(self, df: DataFrame, path: str) -> None:
-        """Stage the full plan to a sibling temp dir (one execution of
-        the expensive DAG), then graft its day partitions onto the
-        published table via dynamic partition overwrite — the parquet
-        analogue of the reference's Delta INSERT OVERWRITE promotion
-        (04c:266-286). Temp lives OUTSIDE the table root so partition
-        discovery can never pick it up, and is removed afterwards."""
-        import shutil
-
-        tmp = path + "__TEMP"
-        df.write.mode("overwrite").parquet(tmp)
+        """Write the plan's day partitions onto the published table with
+        dynamic partition overwrite, the parquet analogue of the
+        reference's Delta INSERT OVERWRITE promotion (04c:266-286).
+        One execution of the plan, one write: Spark stages the job's
+        output itself and swaps in only the day partitions it wrote,
+        so history and readers of other days are untouched."""
         (
-            self.spark.read.parquet(tmp)
-            .write.mode("overwrite")
+            df.write.mode("overwrite")
             .partitionBy("day")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(path)
         )
-        shutil.rmtree(tmp, ignore_errors=True)
 
     def read_published(self, which: str = "unpivoted", day=None) -> DataFrame:
         """Read a published score table; ``day`` prunes to one
@@ -348,7 +338,8 @@ class Pipeline:
         self,
         n_commodities: int | None = None,
         tune: bool = False,
-        day=None,
+        *,
+        day,
         model_type: str = "gbt",
         search: str = "grid",
         n_trials: int | None = None,
@@ -369,7 +360,6 @@ class Pipeline:
             tune=tune,
             store_base=self.store,
             models_base=self.models,
-            materialize_features=False,
             day=day,
             model_type=model_type,
             search=search,

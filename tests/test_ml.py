@@ -1,6 +1,8 @@
 """ML training loop: failure isolation, model registry lifecycle, and
 the GBT tree-model path (04b semantics on MLlib)."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,12 +10,27 @@ from propensity_spark.ml import training as M
 
 
 @pytest.fixture(scope="module")
-def store(tmp_path_factory):
-    return str(tmp_path_factory.mktemp("ml_store"))
+def day(spark, sf_dir):
+    """The latest fact day: the anchor of the standalone feature queries."""
+    from propensity_spark.operators.relational import fact_days
+
+    return fact_days(spark, sf_dir).agg(F.max("day")).first()[0]
 
 
 @pytest.fixture(scope="module")
-def manifest(spark, sf_dir, store):
+def store(spark, sf_dir, day, tmp_path_factory):
+    """One feature store for the module, holding `day`'s features as the
+    pipeline writes them; training and scoring only look them up. Each
+    test that trains passes its own `models_base`."""
+    from propensity_spark.pipeline import Pipeline
+
+    p = Pipeline(spark, sf_dir, str(tmp_path_factory.mktemp("ml_pipeline")))
+    p.engineer_features(day)
+    return p.store
+
+
+@pytest.fixture(scope="module")
+def manifest(spark, sf_dir, store, day, tmp_path_factory):
     """Train one real commodity plus one poisoned (nonexistent) one —
     exercises the per-commodity try/except isolation (04b:400-417)."""
     ratios = M.q_class_ratios(spark, sf_dir)
@@ -24,6 +41,8 @@ def manifest(spark, sf_dir, store):
             sf_dir,
             commodities=[real, "NO#SUCH#COMMODITY"],
             store_base=store,
+            day=day,
+            models_base=str(tmp_path_factory.mktemp("ml_models")),
         ),
         real,
     )
@@ -38,9 +57,9 @@ def test_poisoned_commodity_does_not_kill_loop(spark, manifest):
     assert bad["model_path"] is None and bad["metric_aupr"] is None
 
 
-def test_scoring_skips_failed_models(spark, sf_dir, store, manifest):
+def test_scoring_skips_failed_models(spark, sf_dir, store, day, manifest):
     mf, real = manifest
-    ts, _ = M.build_training_set(spark, sf_dir, store, materialize=False)
+    ts, _ = M.build_training_set(spark, sf_dir, store, day)
     scored = M.score_batch(spark, ts, mf)
     got = {r[0] for r in scored.select("commodity_desc").distinct().collect()}
     assert got == {real}
@@ -74,7 +93,7 @@ def test_registry_promote_and_rollback(spark, manifest, tmp_path):
     )
 
 
-def test_gbt_is_default_model(spark, manifest, sf_dir, store):
+def test_gbt_is_default_model(spark, manifest):
     from pyspark.ml import PipelineModel
     from pyspark.ml.classification import GBTClassificationModel
 
@@ -84,10 +103,10 @@ def test_gbt_is_default_model(spark, manifest, sf_dir, store):
     assert isinstance(loaded.stages[-1], GBTClassificationModel)
 
 
-def test_scoring_all_failed_returns_empty_with_schema(spark, sf_dir, store, manifest):
+def test_scoring_all_failed_returns_empty_with_schema(spark, sf_dir, store, day, manifest):
     mf, real = manifest
     all_failed = mf.withColumn("model_path", F.lit(None).cast("string"))
-    ts, _ = M.build_training_set(spark, sf_dir, store, materialize=False)
+    ts, _ = M.build_training_set(spark, sf_dir, store, day)
     scored = M.score_batch(spark, ts, all_failed)
     assert scored.count() == 0
     assert scored.columns == ["household_key", "commodity_desc", "prediction"]
@@ -120,7 +139,7 @@ def test_classification_metrics_match_sklearn_definitions(spark):
     assert d2["balanced_accuracy"] == 0.0
 
 
-def test_tuned_search_breadth_and_manifest_trials(spark, sf_dir, tmp_path):
+def test_tuned_search_breadth_and_manifest_trials(spark, sf_dir, store, day, tmp_path):
     """M3 at reference breadth: tune=True runs a >=12-point search and
     the manifest records the trial count (judge r2 item 5). One
     commodity with the LR estimator keeps the 12-fit TVS within the
@@ -147,7 +166,9 @@ def test_tuned_search_breadth_and_manifest_trials(spark, sf_dir, tmp_path):
         commodities=[real],
         tune=True,
         model_type="lr",
-        store_base=str(tmp_path / "tuned"),
+        store_base=store,
+        day=day,
+        models_base=str(tmp_path / "models"),
     ).collect()
     assert len(mf) == 1 and mf[0]["stage"] == "Production", mf[0]["error"]
     assert mf[0]["n_trials"] >= 12
@@ -588,12 +609,13 @@ def test_reliability_table_calibrated_vs_miscalibrated(spark):
     assert edge[0]["bin"] == 9
 
 
-def test_train_commodity_models_empty_commodities(spark, sf_dir, tmp_path):
+def test_train_commodity_models_empty_commodities(spark, sf_dir, store, day, tmp_path):
     """r07 review: an empty commodity list returns an empty manifest
     with the stable schema instead of ZeroDivisionError in the
     partition sizing — one bad day must not kill the weekly job."""
     manifest = M.train_commodity_models(
-        spark, sf_dir, commodities=[], store_base=str(tmp_path / "store")
+        spark, sf_dir, commodities=[], store_base=store, day=day,
+        models_base=str(tmp_path / "models"),
     )
     assert manifest.count() == 0
     assert manifest.columns == [
@@ -602,7 +624,7 @@ def test_train_commodity_models_empty_commodities(spark, sf_dir, tmp_path):
     ]
 
 
-def test_train_commodity_models_eval_tables(spark, sf_dir, tmp_path):
+def test_train_commodity_models_eval_tables(spark, sf_dir, store, day, tmp_path):
     """eval_tables=True writes lift + reliability parquet next to each
     shipped model; the tables are well-formed (bins partition the test
     rows; cum_gain ends at 1.0 when positives exist)."""
@@ -610,7 +632,9 @@ def test_train_commodity_models_eval_tables(spark, sf_dir, tmp_path):
         spark,
         sf_dir,
         commodities=1,
-        store_base=str(tmp_path / "store"),
+        store_base=store,
+        day=day,
+        models_base=str(tmp_path / "models"),
         model_type="lr",
         eval_tables=True,
     )
@@ -625,23 +649,24 @@ def test_train_commodity_models_eval_tables(spark, sf_dir, tmp_path):
     assert sum(r["n"] for r in lift) == sum(r["n"] for r in rel)
 
 
-def test_concurrent_training_matches_sequential(spark, sf_dir, tmp_path, monkeypatch):
+def test_concurrent_training_matches_sequential(
+    spark, sf_dir, store, day, tmp_path, monkeypatch
+):
     """r09 guide-§2.6 overlap: per-commodity fits run 2-3 jobs in flight
     when the session has the headroom. Concurrency must not change the
     models — fits are per-commodity independent and seeded — so the
     manifest (order, stages, AUPR values) from a forced-concurrent run
     is identical to the forced-sequential run on the same commodities,
-    with one training set built once and reused (materialize=False on
-    the second run reads the first run's store)."""
-    store = str(tmp_path / "store")
+    both reading the one training set staged for `day`."""
     monkeypatch.setattr(M, "_fit_width", lambda *_: 1)
     seq = M.train_commodity_models(
-        spark, sf_dir, commodities=2, store_base=store, model_type="lr"
+        spark, sf_dir, commodities=2, store_base=store, day=day,
+        models_base=str(tmp_path / "seq"), model_type="lr",
     ).collect()
     monkeypatch.setattr(M, "_fit_width", lambda *_: 2)
     conc = M.train_commodity_models(
-        spark, sf_dir, commodities=2, store_base=store,
-        materialize_features=False, model_type="lr",
+        spark, sf_dir, commodities=2, store_base=store, day=day,
+        models_base=str(tmp_path / "conc"), model_type="lr",
     ).collect()
     assert [r["commodity_desc"] for r in seq] == sorted(
         r["commodity_desc"] for r in seq
@@ -651,3 +676,39 @@ def test_concurrent_training_matches_sequential(spark, sf_dir, tmp_path, monkeyp
         assert a["commodity_desc"] == b["commodity_desc"]
         assert a["stage"] == b["stage"] == "Production"
         assert a["metric_aupr"] == pytest.approx(b["metric_aupr"], abs=0.0)
+
+
+def test_training_and_scoring_only_look_up_the_store(spark, sf_dir, tmp_path):
+    """Features reach the store only through the pipeline's writers:
+    training a model and assembling a training set on a store with two
+    backfilled days leave every grain's committed versions and files as
+    they were — no day is rewritten, retired or added."""
+    import datetime
+
+    from propensity_spark.feature_store import FeatureTable
+    from propensity_spark.operators.features import GRAINS
+    from propensity_spark.operators.relational import fact_days
+    from propensity_spark.pipeline import Pipeline
+
+    p = Pipeline(spark, sf_dir, str(tmp_path / "pipe"))
+    last = fact_days(spark, sf_dir).agg(F.max("day")).first()[0]
+    days = [last - datetime.timedelta(days=30), last]
+    p.backfill(days)
+    tables = [FeatureTable(spark, n, k + ["day"], p.store) for n, k in GRAINS]
+
+    def snapshot():
+        return [
+            (t.history(), sorted(str(f) for f in Path(t.path).rglob("*.parquet")))
+            for t in tables
+        ]
+
+    before = snapshot()
+    assert all(sorted(h) == sorted(str(d) for d in days) for h, _ in before), before
+    mf = M.train_commodity_models(
+        spark, sf_dir, commodities=1, store_base=p.store, day=last,
+        models_base=str(tmp_path / "models"), model_type="lr",
+    ).collect()
+    assert [r["stage"] for r in mf] == ["Production"], mf
+    ts, cols = M.build_training_set(spark, sf_dir, p.store, days[0])
+    assert ts.count() > 0 and cols
+    assert snapshot() == before

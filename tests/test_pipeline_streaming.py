@@ -81,6 +81,50 @@ def test_publish_incremental_adds_commodity_without_rebuild(spark, sf_dir, tmp_p
     assert got[2] == (0.75, None, None)  # never re-scored: rides along
 
 
+def test_publish_writes_each_table_once(spark, sf_dir, tmp_path, monkeypatch):
+    """Promotion is one write per published table, straight into the
+    table with dynamic partition overwrite: no staging copy is written
+    and read back, and an incremental graft that reads the table it
+    overwrites keeps the day partitions it did not touch."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from propensity_spark.pipeline import Pipeline
+
+    writes = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        writes.append(str(path))
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    p = Pipeline(spark, sf_dir, str(tmp_path / "pipe"))
+    d1, d2 = datetime.date(2024, 2, 1), datetime.date(2024, 2, 2)
+
+    def scores(day, rows):
+        return spark.createDataFrame(
+            [(hh, day, c, v) for hh, c, v in rows],
+            "household_key int, day date, commodity_desc string, prediction double",
+        )
+
+    paths = p.publish(scores(d1, [(1, "Brand#1", 0.5), (2, "Brand#1", 0.3)]))
+    assert writes == list(paths)
+    assert not any("__TEMP" in f.name for f in (tmp_path / "pipe" / "out").iterdir())
+
+    writes.clear()
+    assert p.publish_incremental(scores(d2, [(1, "Brand#2", 0.9)])) == paths[1]
+    assert writes == [paths[1]]
+    got = {
+        (str(r["day"]), r["household_key"]): (r["Brand_1"], r["Brand_2"])
+        for r in p.read_published("pivoted").collect()
+    }
+    assert got == {
+        ("2024-02-01", 1): (0.5, None),
+        ("2024-02-01", 2): (0.3, None),
+        ("2024-02-02", 1): (None, 0.9),
+    }
+
+
 def test_published_scores_day_partitioned_and_pruned(spark, sf_dir, tmp_path):
     """Published score tables are day-partitioned: a daily publish
     rewrites ONLY its own day (history files untouched on disk), a new
