@@ -39,13 +39,21 @@ bounds ``read(version=...)`` time travel; ``history()`` is the
 DESCRIBE HISTORY analogue. The pointer doubles as the commit marker: a
 writer that dies before the flip leaves an unpointed v-dir that no
 read (including time travel) ever resolves and the next successful
-write garbage-collects. Single writer per table is assumed (the
-reference's job model); at 100 TB on an object store the pointer file
-becomes a catalog/manifest entry — same seam.
+write garbage-collects. One writer per table at a time (the
+reference's job model, which Delta's commit protocol enforces): every
+mutation holds an exclusive ``flock`` on ``<table>/_WRITER_LOCK``, a
+second live writer raises, and the kernel releases the lock when its
+holder exits, so a killed writer never blocks the re-run. At 100 TB on
+an object store the pointer file becomes a catalog/manifest entry and
+the lock a catalog lease — same seam.
 """
 
 from __future__ import annotations
 
+import contextlib
+import fcntl
+import os
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,146 +82,36 @@ class FeatureTable:
         # Delta VACUUM-retention analogue.
         self.keep_versions = max(1, keep_versions)
         self.path = str(Path(base or DEFAULT_STORE) / name)
-        self._lock_depth = 0
 
     # -- versioned-layout plumbing -----------------------------------------
 
+    @contextlib.contextmanager
     def _writer_lock(self):
-        """Enforce the documented single-writer-per-table assumption
-        LOUDLY: a `_WRITER_LOCK` file (pid written to a temp file,
-        os.link()'d into place — atomic publish, the lock never exists
-        without its pid) claimed for every mutation. A second
-        concurrent writer raises instead of interleaving version
-        numbers / pointer flips into silent corruption. The lock
-        records the holder pid; a lock whose holder is dead (crashed
-        writer) is broken automatically, preserving the layout's
-        crash-recovery story (unpointed v-dirs are GC'd by the next
-        write). Reentrant per table object (merge -> create). At
-        100 TB on an object store this becomes a catalog lease — the
-        same seam as the `_CURRENT` pointer."""
-        import contextlib
-        import os
-
-        table = self
-
-        @contextlib.contextmanager
-        def held():
-            if table._lock_depth > 0:
-                table._lock_depth += 1
-                try:
-                    yield
-                finally:
-                    table._lock_depth -= 1
-                return
-            Path(table.path).mkdir(parents=True, exist_ok=True)
-            lock = Path(table.path) / "_WRITER_LOCK"
-            # Atomic pid publish: the pid goes into a unique temp file
-            # FIRST, then os.link() materializes the lock — link fails
-            # if the lock exists, and the lock file can never exist
-            # without its pid (the old create-then-write window let a
-            # racer read empty content, map it to pid=0, and break a
-            # LIVE lock — two writers proceeding).
-            tmp = Path(table.path) / f"_WRITER_LOCK.tmp.{os.getpid()}.{id(table)}"
-            tmp.write_text(str(os.getpid()))
-            own_ino = None
+        """Enforce the single-writer-per-table assumption LOUDLY: every
+        mutation holds a non-blocking exclusive `flock` on
+        `<table>/_WRITER_LOCK`, so a second concurrent writer (another
+        process, another table object or another thread) raises instead
+        of interleaving version numbers and pointer flips into silent
+        corruption. The kernel drops the lock when its holder's file is
+        closed, so a crashed writer never blocks the next one, and the
+        layout's crash-recovery story holds (unpointed v-dirs are GC'd
+        by the next write). The file is opened per acquisition and
+        never unlinked: unlinking would let two writers lock different
+        inodes. At 100 TB on an object store this becomes a catalog
+        lease, the same seam as the `_CURRENT` pointer."""
+        Path(self.path).mkdir(parents=True, exist_ok=True)
+        lock = Path(self.path) / "_WRITER_LOCK"
+        fd = os.open(lock, os.O_RDWR | os.O_CREAT, 0o644)
+        try:
             try:
-                for _ in range(3):  # retries only after a break/release race
-                    try:
-                        os.link(tmp, lock)
-                        own_ino = os.stat(tmp).st_ino
-                        break
-                    except FileExistsError:
-                        try:
-                            # one consistent snapshot of the lock via an
-                            # open fd (the path's target can change under
-                            # us, the fd's cannot)
-                            with open(lock, "r") as fh:
-                                pid = int(fh.read().strip() or "0")
-                        except (FileNotFoundError, ValueError):
-                            # holder released (or a breaker won) between
-                            # the failed link and the read — retry link;
-                            # NEVER treat a transient read as "stale".
-                            continue
-                        alive = False
-                        if pid:
-                            try:
-                                os.kill(pid, 0)
-                                alive = True
-                            except ProcessLookupError:
-                                alive = False
-                            except PermissionError:  # exists, other user
-                                alive = True
-                        if alive:
-                            raise RuntimeError(
-                                f"concurrent writer (pid {pid}) holds "
-                                f"{lock}; feature tables are single-writer"
-                            )
-                        # Stale (holder died): rename to a unique
-                        # tombstone so exactly ONE breaker wins — a bare
-                        # unlink lets every waiter "break" the same lock,
-                        # including one re-claimed in between (TOCTOU).
-                        tomb = Path(table.path) / (
-                            f"_WRITER_LOCK.stale.{os.getpid()}.{id(table)}"
-                        )
-                        try:
-                            os.rename(lock, tomb)
-                        except FileNotFoundError:
-                            continue  # another breaker won; retry the link
-                        # rename moves whatever the PATH holds NOW — which
-                        # may be a LIVE lock re-claimed after our read.
-                        # Destroy the tombstone only if it still carries
-                        # the pid we just verified dead (content, not
-                        # inode: the filesystem can REUSE the freed inode
-                        # number for the re-claimed lock, so st_ino can
-                        # false-positive). Otherwise put the SAME inode
-                        # back (link preserves st_ino, so the displaced
-                        # holder's inode-checked release still matches)
-                        # and retry from scratch.
-                        try:
-                            tomb_pid = int(tomb.read_text().strip() or "0")
-                        except ValueError:
-                            tomb_pid = -1
-                        if tomb_pid == pid:
-                            tomb.unlink(missing_ok=True)
-                        else:
-                            try:
-                                os.link(tomb, lock)
-                            except FileExistsError:
-                                # We displaced a LIVE holder's lock AND a
-                                # third claimant took the path before we
-                                # could put it back: the tombstone is now
-                                # the displaced holder's ONLY inode.
-                                # Unlinking it here would leave that
-                                # writer mutating with no lock while the
-                                # new claimant also proceeds — surface
-                                # the double-writer race loudly instead
-                                # and leave the tombstone as evidence.
-                                raise RuntimeError(
-                                    f"writer-lock race on {lock}: displaced a "
-                                    f"live holder (pid {tomb_pid}) and the path "
-                                    f"was re-claimed before restore; displaced "
-                                    f"lock preserved at {tomb} — resolve manually"
-                                ) from None
-                            tomb.unlink(missing_ok=True)
-                if own_ino is None:
-                    raise RuntimeError(f"could not claim writer lock {lock}")
-                try:
-                    table._lock_depth = 1
-                    yield
-                finally:
-                    table._lock_depth = 0
-                    # Release only OUR lock: if it was (even incorrectly)
-                    # broken and re-claimed, the inode differs and we must
-                    # not delete the new holder's lock.
-                    try:
-                        if os.stat(lock).st_ino == own_ino:
-                            lock.unlink()
-                    except FileNotFoundError:
-                        pass
-            finally:
-                tmp.unlink(missing_ok=True)
-
-        return held()
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise RuntimeError(
+                    f"concurrent writer holds {lock}; feature tables are single-writer"
+                ) from None
+            yield
+        finally:
+            os.close(fd)
 
     @staticmethod
     def _day_str(day) -> str:
@@ -241,23 +139,26 @@ class FeatureTable:
         hist = self._committed(day_dir)
         return hist[-1] if hist else None
 
+    @staticmethod
+    def _write_pointer(day_dir: Path, versions: list[int]) -> None:
+        """Atomically rewrite the day's `_CURRENT` to `versions`:
+        write-temp + os.replace. The rename is the commit point; readers
+        see either the old pointer or the new one, never a torn file."""
+        tmp = day_dir / "_CURRENT.tmp"
+        tmp.write_text("\n".join(str(v) for v in versions))
+        os.replace(tmp, day_dir / "_CURRENT")
+
     def _flip(self, day_dir: Path, n: int) -> None:
-        """Atomically commit version `n` for a day: append to the
-        committed list, write-temp + os.replace — the rename is the
-        commit point, readers see either the old pointer or the new
-        one, never a torn file. The day's FIRST commit also stamps an
+        """Commit version `n` for a day by appending it to the committed
+        list (`_write_pointer`). The day's FIRST commit also stamps an
         immutable `_BORN` marker — GC rewrites `_CURRENT` to the
         surviving versions only, so `_BORN` is what lets time travel
         distinguish 'day did not exist yet' (silently excluded) from
         'day existed but its versions were vacuumed' (raises)."""
-        import os
-
         hist = self._committed(day_dir) + [n]
         if not (day_dir / "_BORN").exists():
             (day_dir / "_BORN").write_text(str(hist[0]))
-        tmp = day_dir / "_CURRENT.tmp"
-        tmp.write_text("\n".join(str(v) for v in hist))
-        os.replace(tmp, day_dir / "_CURRENT")
+        self._write_pointer(day_dir, hist)
 
     def _born(self, day_dir: Path) -> int | None:
         try:
@@ -325,9 +226,6 @@ class FeatureTable:
         committed at all goes whole. The pointer is rewritten
         (atomically) to exactly the surviving history so the list and
         the dirs can't drift."""
-        import os
-        import shutil
-
         for dd in self._day_dirs():
             hist = self._committed(dd)
             if not hist:
@@ -335,9 +233,7 @@ class FeatureTable:
                 continue
             keep = hist[-max(1, self.keep_versions):]
             if keep != hist:
-                tmp = dd / "_CURRENT.tmp"
-                tmp.write_text("\n".join(str(v) for v in keep))
-                os.replace(tmp, dd / "_CURRENT")
+                self._write_pointer(dd, keep)
             for vd in dd.glob("v=*"):
                 try:
                     v = int(vd.name.split("=", 1)[1])
@@ -370,8 +266,6 @@ class FeatureTable:
         """Flip pointers for every day that received version `n`, then
         GC. `replace_all` (create semantics) also retires days absent
         from the new version. Returns the committed day strings."""
-        import shutil
-
         committed = []
         for dd in self._day_dirs():
             dval = dd.name.split("=", 1)[1]
@@ -708,15 +602,12 @@ class FeatureTable:
 
         Returns an audit dict: affected days, rows removed, committed
         version, purge flag."""
-        import os
         if not values:
             return {"days": [], "rows_removed": 0, "version": None,
                     "purged": purge_history}
         # coalesce: a NULL key is never "in values" — without it the
         # negation below would silently drop NULL-keyed rows too
         cond = F.coalesce(F.col(key_col).isin(values), F.lit(False))
-        import shutil
-
         cur = self.read()
         affected = sorted(
             str(r[0]) for r in cur.where(cond).select("day").distinct().collect()
@@ -740,14 +631,10 @@ class FeatureTable:
                     )
             self._commit_version(n)
             if purge_history:
+                # history shrinks to the new version; _gc deletes the rest
                 for dstr in affected:
-                    dd = Path(self.path) / f"day={dstr}"
-                    for vdir in dd.glob("v=*"):
-                        if int(vdir.name.split("=", 1)[1]) != n:
-                            shutil.rmtree(vdir, ignore_errors=True)
-                    tmp = dd / "_CURRENT.tmp"
-                    tmp.write_text(str(n))
-                    os.replace(tmp, dd / "_CURRENT")
+                    self._write_pointer(Path(self.path) / f"day={dstr}", [n])
+                self._gc()
         return {"days": affected, "rows_removed": removed, "version": n,
                 "purged": purge_history}
 
@@ -756,15 +643,15 @@ class FeatureTable:
         than `before_day` (metadata-only: directory removal, no scan;
         with Delta this is `DELETE WHERE day < ...` + VACUUM). Returns
         the dropped day values."""
-        import shutil
+        from propensity_spark.io import as_date
 
         if not Path(self.path).exists():
             return []  # fresh table: retention is a no-op
-        dropped = []
+        cutoff, dropped = as_date(before_day), []
         with self._writer_lock():
-            for part in sorted(Path(self.path).glob("day=*")):
+            for part in self._day_dirs():
                 day_val = part.name.split("=", 1)[1]
-                if day_val < str(before_day):
+                if as_date(day_val) < cutoff:
                     shutil.rmtree(part)
                     dropped.append(day_val)
         return dropped
@@ -851,7 +738,6 @@ def q_feature_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     every household keyed at 01-03 must resolve to its 01-02 feature
     row (the latest at-or-before), so its checksum equals the un-merged
     day-2 sum."""
-    import shutil
     import uuid
 
     from propensity_spark.operators.features import q_household_features

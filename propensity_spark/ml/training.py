@@ -279,7 +279,8 @@ def train_commodity_models(
     n_trials) — n_trials records the search breadth that produced the
     model. The training set is looked up from the features of `day` in
     the store at `store_base` (build_training_set); this never writes
-    features.
+    features, and raises ValueError, writing nothing, if any grain
+    lacks `day`.
 
     `eval_tables=True` additionally writes the decile-lift and
     calibration-reliability tables of each model's held-out test
@@ -289,6 +290,19 @@ def train_commodity_models(
     # Models default to UNDER the run's store dir: the caller's
     # cleanup of store_base removes them for free.
     models_base = models_base or str(Path(store_base) / "models")
+    # Every lookup miss reads 0.0, so a day that was never engineered
+    # would ship models fitted on all-zero features: refuse it up front
+    # (metadata checks, no scan; the daily scoring path skips this).
+    missing = [
+        name
+        for name, keys in GRAINS
+        if not FeatureTable(spark, name, keys + ["day"], store_base).has_day(day)
+    ]
+    if missing:
+        raise ValueError(
+            f"feature tables {missing} hold no features for day {day} in "
+            f"{store_base}; engineer the day before training"
+        )
     ts, feature_cols = build_training_set(spark, sf_dir, store_base, day)
 
     ratios = (

@@ -80,10 +80,9 @@ def stream_user_features(
             .withColumn("day", stamp)
             .withColumn("epoch_id", F.lit(epoch_id).cast("long"))
         )
-        if not partials.exists():
-            partials.create(partial)
-        else:
-            partials.merge(partial)  # replay-safe: same epoch -> same PK rows
+        # the first epoch creates the table; replay-safe: same epoch ->
+        # same PK rows
+        partials.merge(partial)
 
     raw_schema = _raw_event_schema(spark, sf_dir)
     stream = (

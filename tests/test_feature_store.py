@@ -2,8 +2,10 @@
 parquet-backed FeatureTable (SURVEY.md §2.1 S5/S7/S8, §2.3 J7)."""
 
 import shutil
+import subprocess
+import sys
 import uuid
-from datetime import date
+from datetime import date, datetime
 from pathlib import Path
 
 import pytest
@@ -238,7 +240,7 @@ def test_day_read_is_partition_pruned(spark, store):
     index at all."""
     import contextlib
     import io as _io
-    from datetime import date
+    from datetime import date, datetime
 
     t = FeatureTable(spark, "hh_pp", ["household_key", "day"], store)
     t.create(
@@ -319,14 +321,21 @@ def test_crashed_write_leftovers_invisible_then_gcd(spark, store):
     assert {tuple(r) for r in t.read().collect()} == before
 
 
-def test_expire_drops_only_old_partitions(spark, store):
+@pytest.mark.parametrize(
+    "before",
+    [date(2024, 1, 15), "2024-1-15", datetime(2024, 1, 15)],
+    ids=["date", "unpadded_str", "datetime"],
+)
+def test_expire_drops_only_old_partitions(spark, store, before):
+    """Days compare as dates: an unpadded string or a datetime cutoff
+    drops exactly what the date does, never the boundary day."""
     t = FeatureTable(spark, "hh_e", ["household_key", "day"], store)
     days = [date(2024, 1, 1), date(2024, 1, 15), date(2024, 2, 1)]
     frames = _frame(spark, days[0], [1], 1.0)
     for d in days[1:]:
         frames = frames.unionByName(_frame(spark, d, [1], 1.0))
     t.create(frames)
-    dropped = t.expire(date(2024, 1, 15))
+    dropped = t.expire(before)
     assert dropped == ["2024-01-01"]
     remaining = {str(r["day"]) for r in t.read().select("day").distinct().collect()}
     assert remaining == {"2024-01-15", "2024-02-01"}
@@ -836,142 +845,75 @@ def test_forget_without_purge_keeps_time_travel_then_gc(spark, store):
     assert audit["version"] > v0
 
 
-def test_writer_lock_rejects_live_concurrent_writer(spark, store):
-    """The documented single-writer assumption is now ENFORCED: a
-    `_WRITER_LOCK` held by a live process makes every mutation raise
-    loudly instead of interleaving version numbers into silent
-    corruption; releasing the lock restores normal writes."""
-    import os
-    from pathlib import Path
+# A child process that takes the table's own writer lock, reports
+# "held", and keeps it until its stdin closes (or it is killed).
+_HOLD_LOCK = """
+import sys
+from propensity_spark.feature_store import FeatureTable
+t = FeatureTable(None, sys.argv[1], ["household_key", "day"], sys.argv[2])
+with t._writer_lock():
+    print("held", flush=True)
+    sys.stdin.read()
+"""
 
+
+def _lock_holder(t):
+    # `python -c` puts its working directory on sys.path: run from the repo
+    proc = subprocess.Popen(
+        [sys.executable, "-c", _HOLD_LOCK, t.name, str(Path(t.path).parent)],
+        stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        cwd=Path(__file__).resolve().parents[1],
+    )
+    line = proc.stdout.readline().strip()
+    if line != "held":
+        proc.kill()
+        proc.wait(timeout=60)
+        pytest.fail(f"lock holder did not take the lock: {line!r}")
+    return proc
+
+
+def test_writer_lock_rejects_live_concurrent_writer(spark, store):
+    """The single-writer assumption is enforced: while another live
+    process holds the table's writer lock, a mutation raises instead of
+    interleaving version numbers into silent corruption; once that
+    writer exits, writes proceed."""
     d = date(2024, 1, 1)
     t = FeatureTable(spark, "lk", ["household_key", "day"], store)
     t.create(_frame(spark, d, [1], 1.0))
-    lock = Path(t.path) / "_WRITER_LOCK"
-    lock.write_text(str(os.getpid()))  # a LIVE holder (this process)
-    t2 = FeatureTable(spark, "lk", ["household_key", "day"], store)
-    with pytest.raises(RuntimeError, match="concurrent writer"):
-        t2.merge(_frame(spark, d, [2], 2.0))
-    lock.unlink()
-    assert t2.merge(_frame(spark, d, [2], 2.0)) is not None
-    assert t2.read().count() == 2
-
-
-def test_writer_lock_breaks_stale_dead_holder(spark, store):
-    """A lock left by a CRASHED writer (dead pid) must not brick the
-    table: the next mutation breaks the stale lock, proceeds, and
-    releases its own claim afterwards."""
-    import subprocess
-    from pathlib import Path
-
-    d = date(2024, 1, 1)
-    t = FeatureTable(spark, "lk2", ["household_key", "day"], store)
-    t.create(_frame(spark, d, [1], 1.0))
-    # a real pid that is guaranteed dead by the time we use it
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    lock = Path(t.path) / "_WRITER_LOCK"
-    lock.write_text(str(proc.pid))
+    proc = _lock_holder(t)
+    try:
+        with pytest.raises(RuntimeError, match="concurrent writer"):
+            t.merge(_frame(spark, d, [2], 2.0))
+    finally:
+        proc.stdin.close()
+        proc.wait(timeout=60)
     assert t.merge(_frame(spark, d, [2], 2.0)) is not None
-    assert not lock.exists()  # released after the write
     assert t.read().count() == 2
 
 
-def test_writer_lock_pid_always_published(spark, store):
-    """Atomic pid publish (ADVICE r06): the lock file is os.link()'d
-    into place with its pid already written, so AT NO POINT can a racer
-    observe an existing-but-empty lock (the old create-then-write window
-    mapped empty content to pid=0 == "stale" and broke a LIVE lock)."""
-    import os
-    from pathlib import Path
+def test_writer_lock_breaks_stale_dead_holder(spark, store):
+    """A writer killed while holding the lock (SIGKILL: no cleanup runs)
+    must not block the re-run: the next mutation proceeds."""
+    d = date(2024, 1, 1)
+    t = FeatureTable(spark, "lk2", ["household_key", "day"], store)
+    t.create(_frame(spark, d, [1], 1.0))
+    proc = _lock_holder(t)
+    proc.kill()
+    proc.wait(timeout=60)
+    assert t.merge(_frame(spark, d, [2], 2.0)) is not None
+    assert t.read().count() == 2
 
+
+def test_writer_lock_refuses_second_table_object(spark, store):
+    """Two FeatureTable objects on one table in the same process are
+    two writers: the second is refused while the first holds the lock,
+    and proceeds after it is released."""
     d = date(2024, 1, 1)
     t = FeatureTable(spark, "lk3", ["household_key", "day"], store)
     t.create(_frame(spark, d, [1], 1.0))
-    lock = Path(t.path) / "_WRITER_LOCK"
+    t2 = FeatureTable(spark, "lk3", ["household_key", "day"], store)
     with t._writer_lock():
-        assert lock.read_text().strip() == str(os.getpid())
-        # no temp/tombstone debris is left visible as the lock itself
-    assert not lock.exists()
-    # no stray temp files after release either
-    assert not list(Path(t.path).glob("_WRITER_LOCK.*"))
-
-
-def test_writer_lock_release_spares_foreign_reclaim(spark, store):
-    """Ownership-verified release (ADVICE r06): if our lock was broken
-    and re-claimed by another writer mid-hold, release must NOT delete
-    the new holder's lock (inode comparison, not blind unlink)."""
-    from pathlib import Path
-
-    d = date(2024, 1, 1)
-    t = FeatureTable(spark, "lk4", ["household_key", "day"], store)
-    t.create(_frame(spark, d, [1], 1.0))
-    lock = Path(t.path) / "_WRITER_LOCK"
-    with t._writer_lock():
-        # simulate a breaker stealing + re-claiming the lock mid-hold
-        lock.unlink()
-        lock.write_text("424242")
-    assert lock.exists() and lock.read_text() == "424242"
-    lock.unlink()
-
-
-def test_writer_lock_break_restores_displaced_live_lock(spark, store, monkeypatch):
-    """Inode-verified stale break (r07 review): between reading a DEAD
-    holder pid and the tombstone rename, the lock path can be re-claimed
-    by a LIVE writer (another breaker won the race). The rename then
-    displaces the LIVE lock — so the breaker must verify the tombstone
-    still carries the pid it saw dead (content, not inode: the freed
-    inode number can be REUSED by the re-claimed lock), and on mismatch
-    restore the SAME inode via os.link (preserving the displaced
-    holder's inode-checked release) and retry, which re-reads the live
-    pid and raises."""
-    import os
-    import subprocess
-    from pathlib import Path
-
-    d = date(2024, 1, 1)
-    t = FeatureTable(spark, "lk6", ["household_key", "day"], store)
-    t.create(_frame(spark, d, [1], 1.0))
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    lock = Path(t.path) / "_WRITER_LOCK"
-    lock.write_text(str(proc.pid))  # dead holder — break path engages
-    live_pid = str(os.getpid())
-    real_rename = os.rename
-
-    def racing_rename(src, dst):
-        # simulate the race: just before OUR rename lands, another
-        # breaker removes the stale lock and claims the path itself
-        if "_WRITER_LOCK.stale" in str(dst) and Path(src) == lock:
-            lock.unlink()
-            lock.write_text(live_pid)  # the re-claimed LIVE lock
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    with pytest.raises(RuntimeError, match="concurrent writer"):
-        t.merge(_frame(spark, d, [2], 2.0))
-    monkeypatch.undo()
-    # the displaced live lock was restored, not destroyed
-    assert lock.exists() and lock.read_text().strip() == live_pid
-    assert not list(Path(t.path).glob("_WRITER_LOCK.stale*"))
-    lock.unlink()
-    assert t.merge(_frame(spark, d, [2], 2.0)) is not None
-
-
-def test_writer_lock_stale_break_leaves_no_tombstone(spark, store):
-    """Stale-break goes through a unique rename (single winner) and the
-    tombstone is removed — repeated breaks can't accumulate debris or
-    double-unlink a re-claimed lock."""
-    import subprocess
-    from pathlib import Path
-
-    d = date(2024, 1, 1)
-    t = FeatureTable(spark, "lk5", ["household_key", "day"], store)
-    t.create(_frame(spark, d, [1], 1.0))
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    lock = Path(t.path) / "_WRITER_LOCK"
-    lock.write_text(str(proc.pid))
-    assert t.merge(_frame(spark, d, [2], 2.0)) is not None
-    assert not lock.exists()
-    assert not list(Path(t.path).glob("_WRITER_LOCK.*"))
+        with pytest.raises(RuntimeError, match="concurrent writer"):
+            t2.merge(_frame(spark, d, [2], 2.0))
+    assert t2.merge(_frame(spark, d, [2], 2.0)) is not None
+    assert t2.read().count() == 2

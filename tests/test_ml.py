@@ -712,3 +712,24 @@ def test_training_and_scoring_only_look_up_the_store(spark, sf_dir, tmp_path):
     ts, cols = M.build_training_set(spark, sf_dir, p.store, days[0])
     assert ts.count() > 0 and cols
     assert snapshot() == before
+
+
+def test_training_refuses_a_day_the_store_lacks(spark, sf_dir, store, day, tmp_path):
+    """Every lookup miss reads 0.0, so training on a day that was never
+    engineered would ship a model fitted on all-zero features. The
+    module store holds only `day`: training a week earlier raises,
+    naming every grain and the day, and writes no stage and no model."""
+    import datetime
+
+    from propensity_spark.operators.features import GRAINS
+
+    early = day - datetime.timedelta(days=7)
+    models = tmp_path / "models"
+    with pytest.raises(ValueError, match=str(early)) as err:
+        M.train_commodity_models(
+            spark, sf_dir, commodities=1, store_base=store, day=early,
+            models_base=str(models), model_type="lr",
+        )
+    assert all(repr(name) in str(err.value) for name, _ in GRAINS)
+    assert not (Path(store) / "training_set" / f"day={early}").exists()
+    assert not models.exists()
