@@ -13,8 +13,8 @@ Open equivalents here (SURVEY.md §1 'Spark mapping'):
   once, straight into the next version of the day partitions it
   touches; for days already in the store the existing rows the batch
   does not replace (anti-join on the PK) are appended to that same
-  version. One pointer flip per day commits it, as Delta's MERGE
-  commits one log entry; atomicity is per day partition.
+  version. One pointer rename commits every day of it at once, as
+  Delta's MERGE commits one log entry.
 
 * ``FeatureTable.lookup`` — J7's exact-key left-outer join with the
   per-table column-rename prefix (`household__*`, ...) and key/day
@@ -25,19 +25,23 @@ Open equivalents here (SURVEY.md §1 'Spark mapping'):
 Physical layout — snapshot-safe versioned partitions:
 
     <table>/day=<D>/v=<N>/*.parquet   immutable version dirs
-    <table>/day=<D>/_CURRENT          committed-version list; last = live
+    <table>/_CURRENT                  committed state (JSON): per day,
+                                      its version list (last = live)
+                                      and the version that first
+                                      committed it
 
-Every write (create/merge/compact) materializes a NEW ``v=N`` dir and
-only then commits it by atomically rewriting the day's ``_CURRENT``
-pointer — the single-file-rename analogue of Delta's log commit.
-Readers resolve pointers at DataFrame-build time and scan only the
-resolved version dirs, so a reader mid-scan keeps a consistent
+Every write (create/merge/compact/forget/expire) materializes its NEW
+``v=N`` dirs first and only then commits by atomically rewriting the
+table's one ``_CURRENT`` pointer — the single-file-rename analogue of
+Delta's log commit, so a write lands on every day it touches or on
+none. Readers resolve the pointer at DataFrame-build time and scan only
+the resolved version dirs, so a reader mid-scan keeps a consistent
 snapshot while a concurrent merge/compact lands. GC keeps the newest
 ``keep_versions`` committed versions per day (default 2): the Delta
 VACUUM-retention analogue, which both protects in-flight readers and
 bounds ``read(version=...)`` time travel; ``history()`` is the
 DESCRIBE HISTORY analogue. The pointer doubles as the commit marker: a
-writer that dies before the flip leaves an unpointed v-dir that no
+writer that dies before the rename leaves unpointed v-dirs that no
 read (including time travel) ever resolves and the next successful
 write garbage-collects. One writer per table at a time (the
 reference's job model, which Delta's commit protocol enforces): every
@@ -52,6 +56,7 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
+import json
 import os
 import shutil
 from pathlib import Path
@@ -91,7 +96,7 @@ class FeatureTable:
         mutation holds a non-blocking exclusive `flock` on
         `<table>/_WRITER_LOCK`, so a second concurrent writer (another
         process, another table object or another thread) raises instead
-        of interleaving version numbers and pointer flips into silent
+        of interleaving version numbers and pointer commits into silent
         corruption. The kernel drops the lock when its holder's file is
         closed, so a crashed writer never blocks the next one, and the
         layout's crash-recovery story holds (unpointed v-dirs are GC'd
@@ -119,55 +124,39 @@ class FeatureTable:
 
         return str(as_date(day))
 
-    def _day_dirs(self) -> list[Path]:
-        root = Path(self.path)
-        return sorted(root.glob("day=*")) if root.exists() else []
+    def _vdir(self, dval: str, n: int) -> Path:
+        return Path(self.path) / f"day={dval}" / f"v={n}"
 
-    def _committed(self, day_dir: Path) -> list[int]:
-        """The day's committed-version history (ascending; last = live),
-        from the pointer file. Empty = never committed = invisible.
-        ONLY versions in this list are ever resolved — an unpointed
-        v-dir (crashed writer) can never serve a read, including a
-        time-travel read."""
-        ptr = day_dir / "_CURRENT"
+    def _state(self) -> dict[str, dict]:
+        """The committed table, from the `_CURRENT` pointer: day string
+        -> {"versions": committed-version history, ascending, last =
+        live; "born": the version that first committed the day}. A day
+        absent here was never committed (or was retired) and is
+        invisible. ONLY versions listed here are ever resolved — an
+        unpointed v-dir (crashed writer) can never serve a read,
+        including a time-travel read."""
         try:
-            return [int(line) for line in ptr.read_text().split() if line]
-        except (FileNotFoundError, ValueError):
-            return []
+            return json.loads((Path(self.path) / "_CURRENT").read_text())
+        except FileNotFoundError:
+            return {}
 
-    def _current(self, day_dir: Path) -> int | None:
-        hist = self._committed(day_dir)
-        return hist[-1] if hist else None
-
-    @staticmethod
-    def _write_pointer(day_dir: Path, versions: list[int]) -> None:
-        """Atomically rewrite the day's `_CURRENT` to `versions`:
-        write-temp + os.replace. The rename is the commit point; readers
-        see either the old pointer or the new one, never a torn file."""
-        tmp = day_dir / "_CURRENT.tmp"
-        tmp.write_text("\n".join(str(v) for v in versions))
-        os.replace(tmp, day_dir / "_CURRENT")
-
-    def _flip(self, day_dir: Path, n: int) -> None:
-        """Commit version `n` for a day by appending it to the committed
-        list (`_write_pointer`). The day's FIRST commit also stamps an
-        immutable `_BORN` marker — GC rewrites `_CURRENT` to the
-        surviving versions only, so `_BORN` is what lets time travel
-        distinguish 'day did not exist yet' (silently excluded) from
-        'day existed but its versions were vacuumed' (raises)."""
-        hist = self._committed(day_dir) + [n]
-        if not (day_dir / "_BORN").exists():
-            (day_dir / "_BORN").write_text(str(hist[0]))
-        self._write_pointer(day_dir, hist)
-
-    def _born(self, day_dir: Path) -> int | None:
-        try:
-            return int((day_dir / "_BORN").read_text().strip())
-        except (FileNotFoundError, ValueError):
-            return None
+    def _write_pointer(self, state: dict[str, dict]) -> None:
+        """Commit `state`: trim each day's history to the newest
+        `keep_versions`, then write-temp + os.replace `_CURRENT`. The
+        one rename is the commit point for every day at once: readers
+        see the old table or the new one, never a torn file or a mix of
+        versions. GC then deletes what the new pointer no longer
+        references."""
+        for entry in state.values():
+            del entry["versions"][: -self.keep_versions]
+        ptr = Path(self.path) / "_CURRENT"
+        tmp = ptr.with_name("_CURRENT.tmp")
+        tmp.write_text(json.dumps(state, sort_keys=True))
+        os.replace(tmp, ptr)
+        self._gc(state)
 
     def _resolved(self, day=None, version: int | None = None) -> dict[str, Path]:
-        """day-string -> version dir, resolved through pointers. With
+        """day-string -> version dir, resolved through the pointer. With
         `version`, Delta-style time travel: the latest committed
         version <= `version` per day (a day first committed after that
         version is excluded — it did not exist in that snapshot). A day
@@ -175,71 +164,50 @@ class FeatureTable:
         <= `version` were all garbage-collected past the retention
         horizon raises instead of silently shrinking the snapshot —
         matching Delta's VERSION AS OF error on unreachable versions."""
+        want = None if day is None else self._day_str(day)
         out = {}
-        for dd in self._day_dirs():
-            dval = dd.name.split("=", 1)[1]
-            if day is not None and dval != self._day_str(day):
+        for dval, entry in self._state().items():
+            if want is not None and dval != want:
                 continue
-            hist = self._committed(dd)
-            if version is not None:
-                hist = [v for v in hist if v <= version]
-            resolved = None
-            for n in reversed(hist):
-                if (dd / f"v={n}").exists():
-                    resolved = dd / f"v={n}"
-                    break
-            if resolved is not None:
-                out[dval] = resolved
-            elif version is not None:
-                born = self._born(dd)
-                if hist or (born is not None and born <= version):
-                    raise FileNotFoundError(
-                        f"time travel to version {version}: day {dval} "
-                        f"existed in that snapshot (first committed at "
-                        f"version {born}) but its versions <= {version} "
-                        "were garbage-collected past the retention horizon"
-                    )
+            live = [
+                self._vdir(dval, v)
+                for v in entry["versions"]
+                if (version is None or v <= version) and self._vdir(dval, v).exists()
+            ]
+            if live:
+                out[dval] = live[-1]
+            elif version is not None and entry["born"] <= version:
+                raise FileNotFoundError(
+                    f"time travel to version {version}: day {dval} "
+                    f"existed in that snapshot (first committed at "
+                    f"version {entry['born']}) but its versions <= {version} "
+                    "were garbage-collected past the retention horizon"
+                )
         return out
 
     def _next_version(self) -> int:
-        """Global monotone version: 1 + max over every v-dir and
-        pointer (crashed writers leave unpointed dirs — counted so a
-        retry never reuses their number)."""
-        n = 0
-        for dd in self._day_dirs():
-            cur = self._current(dd)
-            if cur is not None:
-                n = max(n, cur)
-            for vd in dd.glob("v=*"):
-                try:
-                    n = max(n, int(vd.name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return n + 1
+        """Global monotone version: 1 + max over every v-dir on disk.
+        Every committed version has its dir, and crashed writers leave
+        unpointed dirs — counted so a retry never reuses their number."""
+        return 1 + max(
+            (int(vd.name[2:]) for vd in Path(self.path).glob("day=*/v=*")), default=0
+        )
 
-    def _gc(self) -> None:
-        """Retention: keep the newest `keep_versions` committed versions
-        per day (the VACUUM horizon — an in-flight reader's resolved
-        snapshot survives at least keep_versions - 1 subsequent writes,
-        and time travel reaches that far back); drop older versions,
-        plus unpointed dirs from crashed writes — a day that was never
-        committed at all goes whole. The pointer is rewritten
-        (atomically) to exactly the surviving history so the list and
-        the dirs can't drift."""
-        for dd in self._day_dirs():
-            hist = self._committed(dd)
-            if not hist:
+    def _gc(self, state: dict[str, dict]) -> None:
+        """Retention: delete every dir the committed `state` does not
+        reference — versions past the `keep_versions` horizon (an
+        in-flight reader's resolved snapshot survives at least
+        keep_versions - 1 subsequent writes, and time travel reaches
+        that far back), unpointed dirs from crashed writes, and whole
+        days that are retired or were never committed."""
+        for dd in Path(self.path).glob("day=*"):
+            entry = state.get(dd.name.split("=", 1)[1])
+            if entry is None:
                 shutil.rmtree(dd, ignore_errors=True)
                 continue
-            keep = hist[-max(1, self.keep_versions):]
-            if keep != hist:
-                self._write_pointer(dd, keep)
+            keep = {f"v={v}" for v in entry["versions"]}
             for vd in dd.glob("v=*"):
-                try:
-                    v = int(vd.name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if v not in keep:
+                if vd.name not in keep:
                     shutil.rmtree(vd, ignore_errors=True)
 
     def _write_version(self, df: DataFrame, n: int) -> None:
@@ -262,28 +230,36 @@ class FeatureTable:
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("day", "v").parquet(self.path)
 
-    def _commit_version(self, n: int, replace_all: bool = False) -> list[str]:
-        """Flip pointers for every day that received version `n`, then
-        GC. `replace_all` (create semantics) also retires days absent
-        from the new version. Returns the committed day strings."""
-        committed = []
-        for dd in self._day_dirs():
-            dval = dd.name.split("=", 1)[1]
-            if (dd / f"v={n}").exists():
-                self._flip(dd, n)
-                committed.append(dval)
-            elif replace_all:
-                shutil.rmtree(dd, ignore_errors=True)
-        self._gc()
-        return committed
+    def _commit_version(
+        self, n: int, replace_all: bool = False, purge: bool = False
+    ) -> None:
+        """Commit version `n` for every day that holds a v=n dir, in one
+        pointer write: `n` is appended to the day's history (`purge`:
+        the history becomes just `n`), and a day's first commit records
+        `n` as its `born` version. The retention trim drops a day's
+        oldest versions, so `born` is what lets time travel tell 'day
+        did not exist yet' (silently excluded) from 'day existed but
+        its versions were vacuumed' (raises). `replace_all` (create
+        semantics) also retires the days absent from version `n`."""
+        state = self._state()
+        days = {
+            vd.parent.name.split("=", 1)[1]
+            for vd in Path(self.path).glob(f"day=*/v={n}")
+        }
+        if replace_all:
+            state = {d: e for d, e in state.items() if d in days}
+        for d in days:
+            entry = state.setdefault(d, {"born": n, "versions": []})
+            entry["versions"] = [n] if purge else entry["versions"] + [n]
+        self._write_pointer(state)
 
     def exists(self) -> bool:
         return bool(self._resolved())
 
     def has_day(self, day) -> bool:
         """True if the day partition is COMPLETELY materialized — a
-        metadata (pointer + directory) check, no scan. The _CURRENT
-        flip happens only after a successful write, so a merge that
+        metadata (pointer + directory) check, no scan. The pointer
+        commit happens only after a successful write, so a merge that
         died mid-write leaves an unpointed v-dir and the next daily run
         redoes the day instead of silently freezing torn data in the
         store."""
@@ -292,8 +268,8 @@ class FeatureTable:
     def create(self, df: DataFrame) -> int:
         """Full (re)write, partitioned by day (S3 + partition pruning).
         Versioned: the new state lands as unpointed v-dirs first, then
-        every pointer flips; days absent from `df` are retired. Returns
-        the committed version number."""
+        the pointer commits it; days absent from `df` are retired.
+        Returns the committed version number."""
         with self._writer_lock():
             n = self._next_version()
             self._write_version(df, n)
@@ -339,12 +315,10 @@ class FeatureTable:
         entry is the live one. Any listed version is a valid
         `read(version=...)` target."""
         out = {}
-        for dd in self._day_dirs():
-            hist = [
-                v for v in self._committed(dd) if (dd / f"v={v}").exists()
-            ]
+        for dval, entry in self._state().items():
+            hist = [v for v in entry["versions"] if self._vdir(dval, v).exists()]
             if hist:
-                out[dd.name.split("=", 1)[1]] = hist
+                out[dval] = hist
         return out
 
     def diff(self, v_old: int, v_new: int) -> DataFrame:
@@ -405,7 +379,7 @@ class FeatureTable:
         batch does not carry are appended to that same version
         (whenMatchedUpdateAll + whenNotMatchedInsertAll semantics). The
         version stays unpointed, and so invisible, until the pointer
-        flip, so a failure anywhere before it leaves the table as it
+        commit, so a failure anywhere before it leaves the table as it
         was. Returns the committed version number — a valid
         read(version=...) target.
 
@@ -416,25 +390,25 @@ class FeatureTable:
         whose column set differs from the table's raises before
         anything is written, so schema drift fails loudly unless opted
         into."""
-        if not self.exists():
-            return self.create(batch)
         with self._writer_lock():
-            table = self.read()  # the pre-merge snapshot
-            drift = set(batch.columns) ^ set(table.columns)
-            if drift and not allow_new_columns:
-                raise ValueError(
-                    f"merge into {self.name}: columns {sorted(drift)} are not in "
-                    "both the batch and the table (allow_new_columns=True evolves "
-                    "the schema)"
-                )
+            # Read under the lock: an empty table takes the batch as its
+            # first commit, and a table another writer has just committed
+            # to is merged into, never replaced.
+            live = self._resolved()
+            if live:
+                table = self.read()  # the pre-merge snapshot
+                drift = set(batch.columns) ^ set(table.columns)
+                if drift and not allow_new_columns:
+                    raise ValueError(
+                        f"merge into {self.name}: columns {sorted(drift)} are not "
+                        "in both the batch and the table (allow_new_columns=True "
+                        "evolves the schema)"
+                    )
             n = self._next_version()
             self._write_version(batch, n)
             # Touched days already in the store: the live days that now
             # hold a v=n dir — a listing, no scan. A new day needs no more.
-            upserted = [
-                d for d in self._resolved()
-                if (Path(self.path) / f"day={d}" / f"v={n}").exists()
-            ]
+            upserted = [d for d in live if self._vdir(d, n).exists()]
             if upserted:
                 # The batch's PK read back from its version dirs (PK columns
                 # only). No broadcast hint: the batch is unbounded (the full
@@ -497,13 +471,12 @@ class FeatureTable:
         # The compacted rewrite is just another version: written to an
         # unpointed v-dir (readers can't see it, and the source version
         # dir it reads from is immutable), committed by the pointer
-        # flip, after which GC retires versions older than the one just
+        # rename, after which GC retires versions older than the one just
         # superseded. A crash mid-write leaves the pointer — and every
         # reader — on the old, complete version.
-        dstr = self._day_str(day)
         with self._writer_lock():
             n = self._next_version()
-            new_dir = Path(self.path) / f"day={dstr}" / f"v={n}"
+            new_dir = self._vdir(self._day_str(day), n)
             df.write.mode("overwrite").parquet(str(new_dir))
             self._commit_version(n)
             return len(list(new_dir.glob("*.parquet")))
@@ -596,8 +569,8 @@ class FeatureTable:
         By default the superseded versions remain until the normal
         keep_versions GC horizon — time travel still sees the subject
         until then. `purge_history=True` finishes the job for real
-        erasure: every affected day's older version dirs are deleted
-        and `_CURRENT` rewritten to just the new version (the Delta
+        erasure: every affected day's history is committed as just the
+        new version and its older version dirs are deleted (the Delta
         analogue is DELETE + VACUUM(0)).
 
         Returns an audit dict: affected days, rows removed, committed
@@ -622,38 +595,32 @@ class FeatureTable:
             self._write_version(scope.where(~cond), n)
             # a day whose every row was forgotten writes no v=n partition
             # under dynamic overwrite: materialize its empty version so the
-            # pointer flip retires the old data there too
+            # pointer commit retires the old data there too
             for dstr in affected:
-                vdir = Path(self.path) / f"day={dstr}" / f"v={n}"
+                vdir = self._vdir(dstr, n)
                 if not vdir.exists():
                     scope.limit(0).drop("day").write.mode("overwrite").parquet(
                         str(vdir)
                     )
-            self._commit_version(n)
-            if purge_history:
-                # history shrinks to the new version; _gc deletes the rest
-                for dstr in affected:
-                    self._write_pointer(Path(self.path) / f"day={dstr}", [n])
-                self._gc()
+            self._commit_version(n, purge=purge_history)
         return {"days": affected, "rows_removed": removed, "version": n,
                 "purged": purge_history}
 
     def expire(self, before_day) -> list:
         """Operational: retention — drop day partitions strictly older
-        than `before_day` (metadata-only: directory removal, no scan;
-        with Delta this is `DELETE WHERE day < ...` + VACUUM). Returns
-        the dropped day values."""
+        than `before_day` (metadata-only: one pointer commit, then
+        directory removal, no scan; with Delta this is `DELETE WHERE
+        day < ...` + VACUUM). Returns the dropped day values."""
         from propensity_spark.io import as_date
 
         if not Path(self.path).exists():
             return []  # fresh table: retention is a no-op
-        cutoff, dropped = as_date(before_day), []
+        cutoff = as_date(before_day)
         with self._writer_lock():
-            for part in self._day_dirs():
-                day_val = part.name.split("=", 1)[1]
-                if as_date(day_val) < cutoff:
-                    shutil.rmtree(part)
-                    dropped.append(day_val)
+            state = self._state()
+            dropped = [d for d in state if as_date(d) < cutoff]
+            if dropped:
+                self._write_pointer({d: state[d] for d in state if d not in dropped})
         return dropped
 
     def lookup(
@@ -745,11 +712,11 @@ def q_feature_store_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = DEFAULT_STORE / f"roundtrip_{uuid.uuid4().hex[:8]}"
     feats = q_household_features(spark, sf_dir)
     # Persisting d1 for the four downstream consumers was tried and
-    # REJECTED by measurement (r09, tools/ab_overlap.py, min-of-3
-    # interleaved in one warm session: 27.2 -> 31.3 s): only create()
-    # needs all ~90 feature columns — the merge-update derivation and
-    # the as-of key set are narrow, so the cache materializes the wide
-    # frame where recomputation reads pruned parquet subtrees. Same
+    # REJECTED by measurement (r09, min-of-3 interleaved in one warm
+    # session: 27.2 -> 31.3 s): only create() needs all ~90 feature
+    # columns — the merge-update derivation and the as-of key set are
+    # narrow, so the cache materializes the wide frame where
+    # recomputation reads pruned parquet subtrees. Same
     # lesson as the rejected single-scan feature rewrite (guide §1.1).
     d1 = feats.withColumn("day", F.lit("2024-01-01").cast("date"))
     table = FeatureTable(spark, "household_features", ["household_key", "day"], str(base))

@@ -1,7 +1,11 @@
 """MERGE-upsert, point-in-time read, and lookup semantics of the
 parquet-backed FeatureTable (SURVEY.md §2.1 S5/S7/S8, §2.3 J7)."""
 
+import contextlib
+import json
+import os
 import shutil
+import signal
 import subprocess
 import sys
 import uuid
@@ -273,7 +277,7 @@ def test_compact_reduces_files_preserves_rows(spark, store):
     assert n == 1
     # live version holds exactly 1 file (GC keeps the pre-compact
     # version alive for in-flight readers, so rglob would count both)
-    live = part / f"v={int((part / '_CURRENT').read_text().split()[-1])}"
+    live = part / f"v={t.history()[str(d)][-1]}"
     assert len(list(live.glob("*.parquet"))) == 1
     assert {tuple(r) for r in t.read(d).collect()} == before
     with pytest.raises(ValueError):
@@ -281,21 +285,22 @@ def test_compact_reduces_files_preserves_rows(spark, store):
 
 
 def test_has_day_requires_committed_pointer(spark, store):
-    """A partition with parquet but no _CURRENT pointer (torn write:
-    job died between data write and pointer flip) must read as
+    """A partition with parquet but no pointer commit (torn write: job
+    died between data write and pointer commit) must read as
     incomplete so the daily run redoes it instead of freezing torn
     data."""
-    from pathlib import Path
-
     t = FeatureTable(spark, "hh_m", ["household_key", "day"], store)
-    d = date(2024, 1, 1)
-    t.create(_frame(spark, d, [1, 2], 1.0))
-    part = Path(t.path) / f"day={d}"
-    assert t.has_day(d)
-    (part / "_CURRENT").unlink()  # simulate death-before-flip
+    d0, d = date(2023, 12, 31), date(2024, 1, 1)
+    v0 = t.create(_frame(spark, d0, [1, 2], 1.0))
+    # death-before-commit: the day's version is written, never committed
+    _frame(spark, d, [1, 2], 1.0).drop("day").write.parquet(
+        str(Path(t.path) / f"day={d}" / f"v={v0 + 1}")
+    )
+    assert t.has_day(d0)
     assert not t.has_day(d)
     t.merge(_frame(spark, d, [1, 2], 2.0))  # redo path re-commits
     assert t.has_day(d)
+    assert {r["amount"] for r in t.read(d).collect()} == {2.0}
 
 
 def test_crashed_write_leftovers_invisible_then_gcd(spark, store):
@@ -319,6 +324,90 @@ def test_crashed_write_leftovers_invisible_then_gcd(spark, store):
     versions = sorted(int(p.name.split("=")[1]) for p in part.glob("v=*"))
     assert all(v > 99 for v in versions[-1:])  # 99 never reused
     assert {tuple(r) for r in t.read().collect()} == before
+
+
+def test_merge_into_empty_table_keeps_a_concurrent_first_commit(spark, store):
+    """Two writers that both find the table empty: A commits day 1
+    while B is about to take the lock, then B merges day 2. B decides
+    between first commit and upsert under the lock, so A's day
+    survives instead of being retired by a full create."""
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    a = FeatureTable(spark, "race", ["household_key", "day"], store)
+    b = FeatureTable(spark, "race", ["household_key", "day"], store)
+    b_lock = b._writer_lock
+
+    @contextlib.contextmanager
+    def a_commits_first():
+        a.merge(_frame(spark, d1, [1], 1.0))
+        with b_lock():
+            yield
+
+    b._writer_lock = a_commits_first
+    b.merge(_frame(spark, d2, [2], 2.0))
+    rows = {(r["household_key"], r["day"]): r["amount"] for r in b.read().collect()}
+    assert rows == {(1, d1): 1.0, (2, d2): 2.0}
+    assert set(b.history()) == {str(d1), str(d2)}
+
+
+@pytest.mark.parametrize("fail_at", [1, 2])
+def test_interrupted_multi_day_write_never_mixes_versions(
+    spark, store, monkeypatch, fail_at
+):
+    """A two-day merge that dies at the first or second `os.replace`
+    it performs leaves both days on one version, all old or all new,
+    in history(), read() and every read(version=)."""
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    t = FeatureTable(spark, "atomic", ["household_key", "day"], store, keep_versions=5)
+    t.create(_frame(spark, d1, [1], 1.0).unionByName(_frame(spark, d2, [1], 1.0)))
+    real, calls = os.replace, []
+
+    def replace(src, dst):
+        calls.append(dst)
+        if len(calls) == fail_at:
+            raise OSError("killed at a pointer rename")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    with contextlib.suppress(OSError):
+        t.merge(_frame(spark, d1, [1], 9.0).unionByName(_frame(spark, d2, [1], 9.0)))
+    monkeypatch.undo()
+    hist = t.history()
+    assert hist[str(d1)] == hist[str(d2)], hist
+    assert len({r["amount"] for r in t.read().collect()}) == 1
+    for v in hist[str(d1)]:
+        assert len({r["amount"] for r in t.read(version=v).collect()}) == 1, v
+
+
+def test_every_write_commits_with_one_pointer_rename(spark, store, monkeypatch):
+    """create, merge, compact, forget and expire each commit with
+    exactly one rename, of the table's `_CURRENT`, and no day
+    partition holds a pointer file of its own."""
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    t = FeatureTable(spark, "one_commit", ["household_key", "day"], store)
+    real, renames = os.replace, []
+
+    def replace(src, dst):
+        renames.append(Path(dst))
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    writes = {
+        "create": lambda: t.create(
+            _frame(spark, d1, [1, 2], 1.0).unionByName(_frame(spark, d2, [1, 2], 1.0))
+        ),
+        "merge": lambda: t.merge(
+            _frame(spark, d1, [2], 9.0).unionByName(_frame(spark, d2, [3], 9.0))
+        ),
+        "compact": lambda: t.compact(d1),
+        "forget": lambda: t.forget("household_key", [1], purge_history=True),
+        "expire": lambda: t.expire(d2),
+    }
+    for name, write in writes.items():
+        renames.clear()
+        write()
+        assert renames == [Path(t.path) / "_CURRENT"], name
+    assert list(t.history()) == [str(d2)]
+    assert [p.name for p in Path(t.path).glob("day=*/*") if not p.name.startswith("v=")] == []
 
 
 @pytest.mark.parametrize(
@@ -365,7 +454,7 @@ def test_compact_sort_by_enables_data_skipping(spark, tmp_path):
 
     def file_ranges(col):
         part = tmp_path / "store" / "skip" / f"day={day}"
-        live = part / f"v={int((part / '_CURRENT').read_text().split()[-1])}"
+        live = part / f"v={t.history()[str(day)][-1]}"
         out = []
         for f in sorted(live.glob("*.parquet")):
             md = pq.ParquetFile(f).metadata
@@ -917,3 +1006,64 @@ def test_writer_lock_refuses_second_table_object(spark, store):
             t2.merge(_frame(spark, d, [2], 2.0))
     assert t2.merge(_frame(spark, d, [2], 2.0)) is not None
     assert t2.read().count() == 2
+
+
+# A child process that runs a two-day merge on the table and SIGKILLs
+# itself just before the pointer rename that would commit it.
+_KILLED_MERGE = """
+import json, os, signal, sys
+from pyspark.sql import functions as F
+from propensity_spark.feature_store import FeatureTable
+from propensity_spark.session import get_spark
+
+spark = get_spark("killed-merge", master="local[2]", shuffle_partitions=2)
+real = os.replace
+
+def replace(src, dst):
+    if os.path.basename(dst) == "_CURRENT":
+        os.kill(os.getpid(), signal.SIGKILL)
+    return real(src, dst)
+
+os.replace = replace
+batch = spark.createDataFrame(
+    json.loads(sys.argv[3]), "household_key int, day string, amount double"
+).withColumn("day", F.col("day").cast("date"))
+FeatureTable(spark, sys.argv[1], ["household_key", "day"], sys.argv[2]).merge(batch)
+"""
+
+_KILLED_BATCH = [[1, "2024-01-01", 9.0], [3, "2024-01-01", 9.0], [2, "2024-01-02", 9.0]]
+
+
+def test_killed_multi_day_merge_reruns_to_the_uninterrupted_result(spark, store):
+    """A writer process SIGKILLed just before its commit rename leaves
+    the table exactly as it was, does not block the re-run, and the
+    re-run's rows equal those of a merge that was never interrupted."""
+    d1, d2 = date(2024, 1, 1), date(2024, 1, 2)
+    base = _frame(spark, d1, [1, 2], 1.0).unionByName(_frame(spark, d2, [1, 2], 1.0))
+    batch = spark.createDataFrame(
+        _KILLED_BATCH, "household_key int, day string, amount double"
+    ).withColumn("day", F.col("day").cast("date"))
+    t = FeatureTable(spark, "killed", ["household_key", "day"], store)
+    t.create(base)
+    before_rows = sorted(tuple(r) for r in t.read().collect())
+    before_hist = t.history()
+    before_dirs = set(Path(t.path).glob("day=*/v=*"))
+
+    child = subprocess.run(
+        [sys.executable, "-c", _KILLED_MERGE, t.name, store, json.dumps(_KILLED_BATCH)],
+        cwd=Path(__file__).resolve().parents[1],
+        env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+        capture_output=True, text=True, timeout=600,
+    )
+    assert child.returncode == -signal.SIGKILL, child.stderr[-3000:]
+    assert set(Path(t.path).glob("day=*/v=*")) > before_dirs  # the batch landed
+    assert sorted(tuple(r) for r in t.read().collect()) == before_rows
+    assert t.history() == before_hist
+
+    t.merge(batch)  # the dead writer's lock does not block the re-run
+    ref = FeatureTable(spark, "uninterrupted", ["household_key", "day"], store)
+    ref.create(base)
+    ref.merge(batch)
+    assert sorted(tuple(r) for r in t.read().collect()) == sorted(
+        tuple(r) for r in ref.read().collect()
+    )
