@@ -450,31 +450,33 @@ class FeatureTable:
         sorts by the Morton interleaved key over ALL `sort_by` columns
         (io.zorder_key) so skipping works for filters on any of them;
         default is lexicographic (leading-column skipping only)."""
-        if not self.has_day(day):
-            raise ValueError(f"no partition for day={day}")
-        df = self.read(day).drop("day")  # day is path-encoded; restored by dir
-        if sort_by and zorder and len(sort_by) > 1:
-            from propensity_spark.io import zorder_key
-
-            df = (
-                df.withColumn("__zkey", zorder_key(df, sort_by))
-                .repartitionByRange(target_files, "__zkey")
-                .sortWithinPartitions("__zkey")
-                .drop("__zkey")
-            )
-        elif sort_by:
-            df = df.repartitionByRange(target_files, *sort_by).sortWithinPartitions(
-                *sort_by
-            )
-        else:
-            df = df.repartition(target_files)
-        # The compacted rewrite is just another version: written to an
-        # unpointed v-dir (readers can't see it, and the source version
-        # dir it reads from is immutable), committed by the pointer
-        # rename, after which GC retires versions older than the one just
-        # superseded. A crash mid-write leaves the pointer — and every
-        # reader — on the old, complete version.
+        # Read under the lock, as merge does: a snapshot taken before it
+        # can miss another writer's commit, which this rewrite would drop.
         with self._writer_lock():
+            if not self.has_day(day):
+                raise ValueError(f"no partition for day={day}")
+            df = self.read(day).drop("day")  # day is path-encoded; restored by dir
+            if sort_by and zorder and len(sort_by) > 1:
+                from propensity_spark.io import zorder_key
+
+                df = (
+                    df.withColumn("__zkey", zorder_key(df, sort_by))
+                    .repartitionByRange(target_files, "__zkey")
+                    .sortWithinPartitions("__zkey")
+                    .drop("__zkey")
+                )
+            elif sort_by:
+                df = df.repartitionByRange(target_files, *sort_by).sortWithinPartitions(
+                    *sort_by
+                )
+            else:
+                df = df.repartition(target_files)
+            # The compacted rewrite is just another version: written to an
+            # unpointed v-dir (readers can't see it, and the source version
+            # dir it reads from is immutable), committed by the pointer
+            # rename, after which GC retires versions older than the one just
+            # superseded. A crash mid-write leaves the pointer — and every
+            # reader — on the old, complete version.
             n = self._next_version()
             new_dir = self._vdir(self._day_str(day), n)
             df.write.mode("overwrite").parquet(str(new_dir))
@@ -581,16 +583,17 @@ class FeatureTable:
         # coalesce: a NULL key is never "in values" — without it the
         # negation below would silently drop NULL-keyed rows too
         cond = F.coalesce(F.col(key_col).isin(values), F.lit(False))
-        cur = self.read()
-        affected = sorted(
-            str(r[0]) for r in cur.where(cond).select("day").distinct().collect()
-        )
-        if not affected:
-            return {"days": [], "rows_removed": 0, "version": None,
-                    "purged": purge_history}
-        scope = cur.where(F.col("day").isin(affected))
-        removed = scope.where(cond).count()
+        # Read under the lock, for the reason compact does.
         with self._writer_lock():
+            cur = self.read()
+            affected = sorted(
+                str(r[0]) for r in cur.where(cond).select("day").distinct().collect()
+            )
+            if not affected:
+                return {"days": [], "rows_removed": 0, "version": None,
+                        "purged": purge_history}
+            scope = cur.where(F.col("day").isin(affected))
+            removed = scope.where(cond).count()
             n = self._next_version()
             self._write_version(scope.where(~cond), n)
             # a day whose every row was forgotten writes no v=n partition

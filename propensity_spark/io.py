@@ -305,29 +305,6 @@ def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame
     return spark.read.json(path, schema=schema)
 
 
-CORRUPT_COL = "_corrupt_record"
-
-
-def read_csv_capturing_corrupt(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """CSV scan that quarantines malformed rows instead of silently
-    nulling them (PERMISSIVE default) or dropping the whole job
-    (FAILFAST): rows that don't parse land with their raw text in
-    `_corrupt_record` and NULL data columns, so the pipeline can route
-    them to a dead-letter table and alert — the production ingest
-    posture for multi-TB third-party feeds where one bad row must
-    neither kill nor silently poison the load."""
-    full = T.StructType(
-        list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
-    )
-    return (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .csv(path, header=True, schema=full)
-    )
-
-
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 16):
     """Morton (Z-order) interleaved-bit key over `cols` — the
     data-skipping clustering technique Delta's OPTIMIZE ZORDER BY
@@ -391,80 +368,3 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 16):
                 f"shiftleft(shiftright({quantized[i]}, {b}) & 1, {b * n + i})"
             )
     return F.expr(" + ".join(terms))
-
-
-def sorted_export(
-    df: DataFrame, path: str, sort_cols: list[str], n_files: int
-) -> None:
-    """Range-partitioned, within-file-sorted parquet export — the
-    data-layout write for hand-off to downstream engines. Rows are
-    range-partitioned on `sort_cols` (Spark samples the key
-    distribution to pick balanced split points — no manual histogram)
-    and sorted inside each partition, so every output file covers a
-    DISJOINT key range and carries tight parquet min/max stats: a
-    reader filtering on the sort key prunes whole files (the same
-    mechanism FeatureTable.compact uses for Z-order multi-column
-    locality, io.py:261; use this one for single-dimension range
-    predicates and merge-join-friendly layout).
-
-    At 100 TB: one range-exchange shuffle (sampling pass + shuffle);
-    the per-partition sort spills. Pick n_files so each file lands
-    near the HDFS/S3 sweet spot (~128-1024 MB)."""
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    n_buckets: int,
-    path: str | None = None,
-) -> None:
-    """Persist `df` as a Hive-bucketed, bucket-sorted parquet table:
-    rows are hash-partitioned into `n_buckets` files per write task by
-    `key` and sorted by it within each bucket. The payoff is at read
-    time: a join (or aggregation) on `key` between two tables bucketed
-    with the SAME bucket count satisfies the join's distribution
-    requirement straight off the scan — Catalyst plans a SortMergeJoin
-    with ZERO Exchange on either side (asserted in
-    tests/test_plans.py). At 100 TB this is the difference between
-    re-shuffling the fact table on every run of a recurring join and
-    shuffling it ONCE at ingest; bucket-pruning also serves point
-    lookups on `key` from a single bucket file.
-
-    `path` makes the table external (data at `path`, metadata in the
-    session catalog); bucketing metadata lives in the catalog, which
-    is why this is saveAsTable and not parquet(path)."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, key).sortBy(key)
-    if path is not None:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table_name)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str = "row",
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """XML ingestion via Spark 4's built-in xml source (S1 family —
-    the reference ingests CSV only; XML joins CSV/JSON/ORC as a
-    first-class feed format here). Explicit schema recommended in
-    production for the same reason as read_csv: inference scans the
-    data twice and drifts with it."""
-    r = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(path)
-
-
-def write_xml(df: DataFrame, path: str, row_tag: str = "row") -> None:
-    """XML export (row-per-record under `row_tag`)."""
-    df.write.format("xml").option("rowTag", row_tag).mode(
-        "overwrite"
-    ).save(path)

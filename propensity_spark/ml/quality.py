@@ -1,135 +1,35 @@
-"""Learned quality filtering — the fastText-style classifier step of
-CCNet / LLaMA / RedPajama / DCLM data pipelines: train a linear
-classifier on weak labels (curated-reference docs vs random web), then
-keep documents the model scores as reference-like.
+"""Learned quality filtering — the classifier step of CCNet / LLaMA /
+RedPajama / DCLM data pipelines: fit a linear model on weak labels,
+then keep documents the model scores as high quality.
 
-Spark-first shape: featurization is `HashingTF` over the tokenized
-text (map-side, fixed-width feature space — the same hashing trick
-fastText uses, no vocabulary state to ship), training is MLlib
-`LogisticRegression` (distributed treeAggregate L-BFGS), scoring is a
-broadcast of the fitted coefficient vector applied map-side. At 100 TB
-the only data movement is the gradient treeAggregate during fit;
-scoring shuffles nothing.
+The `quality_filter` gate entry runs the whole train -> broadcast ->
+score loop in its exact-arithmetic configuration, so it is DuckDB-
+oracle-checkable. At 100 TB the only data movement is the one-pass
+aggregate of the fit; scoring is map-side and shuffles nothing.
 
-Gate note: the synthetic `documents` fixture is random word soup with
-no learnable document-level signal (measured: lang and perplexity
-head/tail both give test AUC ~0.5), so this operator carries pytest
-evidence on a separable corpus rather than a vacuous gate entry —
-the same evidence class as the registry/metric ML components.
+Shape:
+  1. weak labels from a Gopher-style rule (long-word density);
+  2. distributed single-pass fit: the normal-equation sums of a linear
+     probability model over K=2 integer features (count aggregates —
+     exact in BOTH engines);
+  3. the 3x3 system solved by Cramer's rule on exact integers (driver
+     side: Python bigints; oracle side: DuckDB HUGEINT) — no float
+     enters until nothing is left to round;
+  4. coefficients broadcast back as decimal literals; scoring is a
+     map-side sign test  keep = [sign(det) * (2*q(x) - det) > 0]  with
+     q(x) = det0 + det1*x1 + det2*x2, which equals score > 0.5 without
+     ever forming the division.
+
+Magnitudes: dets are O(N * (max_x^2 * N)^2); BIGINT overflows past
+~5e3 docs, so both sides carry HUGEINT/DECIMAL(38,0). That bounds the
+exact path at ~1e9 docs; past that the production fit switches to the
+double-precision solve (same one-pass sums), documented in SCALE.md.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-QC_NUM_FEATURES = 4096
-QC_KEEP_PROB = 0.5
-
-
-def featurize(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Tokenize + hash to a fixed QC_NUM_FEATURES-wide sparse vector.
-    Map-only; the feature space never grows with the vocabulary."""
-    from pyspark.ml.feature import HashingTF
-
-    words = docs.withColumn(
-        "__words",
-        F.expr(f"filter(split(lower({text_col}), ' '), w -> length(w) >= 1)"),
-    )
-    tf = HashingTF(
-        inputCol="__words", outputCol="features", numFeatures=QC_NUM_FEATURES
-    )
-    return tf.transform(words).drop("__words")
-
-
-def train_quality_classifier(
-    docs: DataFrame,
-    label_col: str = "label",
-    text_col: str = "text",
-    max_iter: int = 30,
-    reg_param: float = 0.01,
-):
-    """Fit the reference-vs-random classifier. `label_col` is the weak
-    label (1.0 = curated/reference-like). Returns the fitted MLlib
-    model; L-BFGS over commutative treeAggregate sums is deterministic
-    for a given dataset."""
-    from pyspark.ml.classification import LogisticRegression
-
-    feat = featurize(docs, text_col).withColumn(
-        "label", F.col(label_col).cast("double")
-    )
-    from propensity_spark.ml.training import _strip_training_summaries
-
-    lr = LogisticRegression(maxIter=max_iter, regParam=reg_param)
-    model = lr.fit(feat)
-    # Spark 4.1 closure-safety: see _strip_training_summaries — without
-    # this, evaluate() dies if any Observation ran earlier in the session.
-    _strip_training_summaries(model)
-    return model
-
-
-def score_quality(model, docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Score docs with a fitted classifier: appends `quality_prob`
-    (P(reference-like)) and `quality_keep` (prob > QC_KEEP_PROB).
-    Coefficients broadcast; scoring is map-side."""
-    from pyspark.ml.functions import vector_to_array
-
-    pred = model.transform(featurize(docs, text_col))
-    return (
-        pred.withColumn(
-            "quality_prob", vector_to_array("probability").getItem(1)
-        )
-        .withColumn(
-            "quality_keep", (F.col("quality_prob") > QC_KEEP_PROB).cast("int")
-        )
-        .drop("features", "rawPrediction", "probability", "prediction")
-    )
-
-
-def evaluate_quality_classifier(
-    model, docs: DataFrame, label_col: str = "label", text_col: str = "text"
-):
-    """AUC + accuracy of the classifier on a labeled frame (both
-    computed distributed via MLlib evaluators / one agg). `text_col`
-    must match the column the model was trained on (same contract as
-    train_quality_classifier / score_quality)."""
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
-
-    feat = featurize(docs, text_col).withColumn(
-        "label", F.col(label_col).cast("double")
-    )
-    pred = model.transform(feat)
-    auc = BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(pred)
-    acc = pred.selectExpr(
-        "avg(cast(prediction = label as double)) AS a"
-    ).first()["a"]
-    return {"auc": float(auc), "accuracy": float(acc)}
-
-
-# ---------------------------------------------------------------------------
-# quality_filter gate entry: the learned-filter pipeline in its exact-
-# arithmetic configuration, so the whole train -> broadcast -> score loop
-# is DuckDB-oracle-checkable (the hashed-text LogisticRegression variant
-# above keeps pytest evidence on a separable corpus; its fitted floats
-# cannot be reproduced in SQL).
-#
-# Shape (identical to the production filter):
-#   1. weak labels from a Gopher-style rule (long-word density);
-#   2. distributed single-pass fit: the normal-equation sums of a linear
-#      probability model over K=2 integer features (count aggregates —
-#      exact in BOTH engines);
-#   3. the 3x3 system solved by Cramer's rule on exact integers (driver
-#      side: Python bigints; oracle side: DuckDB HUGEINT) — no float
-#      enters until nothing is left to round;
-#   4. coefficients broadcast back as decimal literals; scoring is a
-#      map-side sign test  keep = [sign(det) * (2*q(x) - det) > 0]  with
-#      q(x) = det0 + det1*x1 + det2*x2, which equals score > 0.5 without
-#      ever forming the division.
-# Magnitudes: dets are O(N * (max_x^2 * N)^2); BIGINT overflows past
-# ~5e3 docs, so both sides carry HUGEINT/DECIMAL(38,0). That bounds the
-# exact path at ~1e9 docs; past that the production fit switches to the
-# double-precision solve (same one-pass sums), documented in SCALE.md.
-# ---------------------------------------------------------------------------
 
 QF_LONG_WORD = 6  # Gopher-style "long word" threshold (chars)
 QF_RULE_MULT = 5  # weak label: 5 * n_long_words >= n_words

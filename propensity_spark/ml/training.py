@@ -12,8 +12,8 @@ and registers models in MLflow (04b:424-443). Spark-native rebuild:
   of `scale_pos_weight`;
 * tuning -> ``TrainValidationSplit`` + ``ParamGridBuilder`` (M3) with
   parallelism = sc.defaultParallelism, seeded splits (M2);
-* registry -> a parquet model-manifest table + saved MLlib pipelines
-  under a models/ directory with stage promotion (M6);
+* registry -> a parquet model manifest (model path, AUPR and stage per
+  commodity) + saved MLlib pipelines under a models/ directory (M6);
 * scoring -> ``PipelineModel.transform`` (M7), probability flipped to
   the positive class like `1 - prediction` at 04c:185.
 
@@ -472,45 +472,6 @@ def score_batch(
     return out
 
 
-def calibrate_scores(
-    holdout_scored: DataFrame,
-    to_calibrate: DataFrame,
-    score_col: str = "prediction",
-    label_col: str = "purchased",
-):
-    """Isotonic score calibration — the post-processing step a campaign
-    team needs before treating propensities as probabilities. GBT margin
-    probabilities (04c:185's positive-class extraction) rank well but
-    are not calibrated; isotonic regression fits the monotone
-    score -> empirical-purchase-rate mapping on a scored holdout and
-    applies it to the batch. Monotone by construction, so ranking
-    (and therefore top-N campaign selection) is unchanged — only the
-    probability VALUES move.
-
-    Distributed end-to-end: IsotonicRegression trains via MLlib's
-    parallel pool-adjacent-violators, the transform is a map-side
-    lookup into the broadcast piecewise-linear boundaries. Returns
-    (calibrated DataFrame with `calibrated` column, fitted model)."""
-    from pyspark.ml.regression import IsotonicRegression
-
-    iso = IsotonicRegression(
-        featuresCol=score_col,
-        labelCol=label_col,
-        predictionCol="calibrated",
-        isotonic=True,
-    )
-    model = iso.fit(
-        holdout_scored.select(
-            F.col(score_col).cast("double").alias(score_col),
-            F.col(label_col).cast("double").alias(label_col),
-        )
-    )
-    out = model.transform(
-        to_calibrate.withColumn(score_col, F.col(score_col).cast("double"))
-    )
-    return out, model
-
-
 def classification_metrics(scored: DataFrame, threshold: float = 0.5) -> DataFrame:
     """M5 parity: the reference's sklearn metric set (04b:253-269 —
     average_precision via evaluator above, plus balanced_accuracy and
@@ -603,8 +564,8 @@ def reliability_table(
     """Calibration / reliability table: fixed-width probability bins
     (scores are already in [0,1]) with mean predicted probability vs
     observed positive rate and the per-bin calibration gap — the
-    diagnostic that says whether `score_batch`'s isotonic calibration
-    actually earned its keep. Unlike decile_lift's rank bins, these
+    diagnostic that says whether `score_batch`'s probabilities can be
+    read as purchase rates. Unlike decile_lift's rank bins, these
     are VALUE bins: map-side assignment (no ntile sort), one n_bins
     aggregation — shuffle-free except the n_bins-row exchange, the
     cheapest possible plan at any scale. `ece` (expected calibration
@@ -745,90 +706,6 @@ def cross_validate(
         "fold int, n_train bigint, n_test bigint, aupr double, "
         "balanced_accuracy double, mcc double",
     )
-
-
-class ModelRegistry:
-    """M6 registry lifecycle (04b:424-443 semantics, MLflow-free):
-    a parquet manifest of (commodity_desc, commodity_clean, model_path,
-    metric_aupr, stage, version). `register` adds versions in Staging,
-    `promote` moves one version to Production (archiving the previous
-    Production), `rollback` restores the most recent Archived version.
-    The table is control-plane sized (#commodities x #versions) so
-    full-rewrite transitions are driver-cheap at any data scale."""
-
-    COLS = (
-        "commodity_desc string, commodity_clean string, model_path string, "
-        "metric_aupr double, stage string, version int"
-    )
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def _read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
-
-    def _write(self, df: DataFrame) -> None:
-        out = self.spark.createDataFrame(df.collect(), self.COLS)  # tiny control table
-        out.write.mode("overwrite").parquet(self.path)
-
-    def register(self, manifest: DataFrame) -> None:
-        """New versions enter in Staging (04b:424-428); failed and
-        skipped training rows keep their stage for ops visibility."""
-        new = manifest.select(
-            "commodity_desc",
-            "commodity_clean",
-            "model_path",
-            "metric_aupr",
-            F.when(F.col("stage").isin("failed", "skipped"), F.col("stage"))
-            .otherwise("Staging")
-            .alias("stage"),
-        )
-        if Path(self.path).exists():
-            current = self._read()
-            next_v = (current.agg(F.max("version")).collect()[0][0] or 0) + 1
-            merged = current.unionByName(new.withColumn("version", F.lit(next_v)))
-        else:
-            merged = new.withColumn("version", F.lit(1))
-        self._write(merged)
-
-    def promote(self, commodity: str, version: int) -> None:
-        """Staging -> Production; the previous Production of the same
-        commodity is Archived (04b:434-443)."""
-        df = self._read()
-        is_c = F.col("commodity_desc") == commodity
-        df = df.withColumn(
-            "stage",
-            F.when(is_c & (F.col("stage") == "Production"), "Archived")
-            .when(is_c & (F.col("version") == version), "Production")
-            .otherwise(F.col("stage")),
-        )
-        self._write(df)
-
-    def rollback(self, commodity: str) -> None:
-        """Archive the current Production and restore the most recent
-        Archived version of the commodity."""
-        df = self._read()
-        rows = df.where(F.col("commodity_desc") == commodity).collect()
-        archived = sorted(
-            (r for r in rows if r["stage"] == "Archived"), key=lambda r: -r["version"]
-        )
-        if not archived:
-            raise ValueError(f"no archived version to roll back to for {commodity!r}")
-        restore_v = archived[0]["version"]
-        is_c = F.col("commodity_desc") == commodity
-        df = df.withColumn(
-            "stage",
-            F.when(is_c & (F.col("stage") == "Production"), "Archived")
-            .when(is_c & (F.col("version") == restore_v), "Production")
-            .otherwise(F.col("stage")),
-        )
-        self._write(df)
-
-    def production(self) -> DataFrame:
-        """The scoring view: exactly the Production rows (04c:94 model
-        URI resolution) — feed this to score_batch."""
-        return self._read().where(F.col("stage") == "Production")
 
 
 def q_train_score_propensity(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,16 +8,15 @@ Two REAL stdlib codecs carry the pixel path: a full P6 PPM parser
 encoder/decoder (8-bit truecolor, chunk CRC32 validation, zlib
 inflate, scanline defiltering for filter types 0-4). Only formats
 that genuinely need an external library (JPEG/WebP) raise
-NotImplementedError behind an import-try; ``_decode_stub`` remains
-for the metadata-plumbing demo only. Everything Spark-side is real
-and tested: the binary column construction, the mapInPandas batch
+NotImplementedError behind an import-try. Everything Spark-side is
+real and tested: the binary column construction, the mapInPandas batch
 iterator signature, the output schema, and the partition-preserving
 plan (map-only — no shuffle at any scale).
 
 The fixtures carry no binary columns, so payloads are synthesized from
 `documents.text` (utf-8 bytes) — which also makes the whole pipeline
-DuckDB-oracle-checkable: the fake decode is pure arithmetic on
-octet_length.
+DuckDB-oracle-checkable: every decoded value is pure arithmetic on
+the text bytes.
 """
 
 from __future__ import annotations
@@ -29,17 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from propensity_spark.io import load_table
-
-MEDIA_SCHEMA = (
-    "doc_id bigint, mime string, byte_len bigint, width int, height int, n_frames int"
-)
-
-
-def _decode_stub(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decode: (width, height, n_frames) from byte
-    length. Replace with PIL/libav decoding where available."""
-    n = len(payload)
-    return 16 + n % 624, 16 + (n * 7) % 464, 1 + n % 24
 
 
 def encode_ppm(width: int, height: int, pixels: bytes) -> bytes:
@@ -284,23 +272,6 @@ def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
     )
 
 
-def _extract_media_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: one Arrow batch in, one metadata frame out.
-    Vectorized over the batch; no per-row Python beyond the byte ops."""
-    for pdf in batches:
-        lens = pdf["payload"].map(len)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "mime": pdf["mime"],
-                "byte_len": lens,
-                "width": (16 + lens % 624).astype("int32"),
-                "height": (16 + (lens * 7) % 464).astype("int32"),
-                "n_frames": (1 + lens % 24).astype("int32"),
-            }
-        )
-
-
 def with_media_columns(docs: DataFrame) -> DataFrame:
     """Attach the opaque binary payload + typed metadata columns —
     the multimodal column convention (payload BINARY, mime STRING)."""
@@ -312,14 +283,6 @@ def with_media_columns(docs: DataFrame) -> DataFrame:
         .otherwise("video/mp4")
         .alias("mime"),
     )
-
-
-def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary decode plumbing end-to-end: build payloads, run the
-    Arrow-batched mapInPandas extractor, emit typed metadata."""
-    docs = load_table(spark, sf_dir, "documents")
-    media = with_media_columns(docs)
-    return media.mapInPandas(_extract_media_meta, schema=MEDIA_SCHEMA)
 
 
 # Synthetic PPM geometry: w in [4, 63], h in [4, 47] keeps per-doc pixel
@@ -353,66 +316,6 @@ def synth_pixels(text_bytes: bytes) -> tuple[int, int, bytes]:
 def synth_ppm_payload(text_bytes: bytes) -> bytes:
     """Deterministic real PPM payload (see synth_pixels)."""
     return encode_ppm(*synth_pixels(text_bytes))
-
-
-def synthesize_media(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) -> (doc_id, payload BINARY, mime): the staged twin
-    of the fused gate pipeline's format split — odd doc_ids get a real
-    PNG container, even doc_ids a real P6 PPM, same deterministic pixel
-    buffer either way. Map-only."""
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, mimes = [], []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                tb = (t or "").encode("utf-8")
-                if doc_id % 2 == 1:
-                    payloads.append(encode_png(*synth_pixels(tb)))
-                    mimes.append("image/png")
-                else:
-                    payloads.append(synth_ppm_payload(tb))
-                    mimes.append("image/x-portable-pixmap")
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "mime": mimes}
-            )
-
-    return docs.mapInPandas(synth, schema="doc_id bigint, payload binary, mime string")
-
-
-def decode_media(media: DataFrame) -> DataFrame:
-    """(doc_id, payload) -> decoded metadata via the REAL PPM parser:
-    header parse, pixel-buffer validation, pixel checksum, plus an
-    8x8 nearest-neighbor thumbnail re-decoded for its checksum. All
-    pixel math happens on actual decoded buffers inside the Arrow
-    worker; map-only, no shuffle at any scale."""
-    import numpy as np
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "byte_len", "width", "height", "px_sum", "r8_sum"
-            )}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, _maxval, px = decode_image(bytes(payload))
-                small = resize_rgb_nearest(px, w, h, RESIZE_SMALL, RESIZE_SMALL)
-                _sw, _sh, _sm, spx = decode_ppm(
-                    encode_ppm(RESIZE_SMALL, RESIZE_SMALL, small)
-                )
-                out["doc_id"].append(doc_id)
-                out["byte_len"].append(len(payload))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(int(np.frombuffer(px, np.uint8).sum()))
-                out["r8_sum"].append(int(np.frombuffer(spx, np.uint8).sum()))
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, byte_len bigint, width int, height int, "
-            "px_sum bigint, r8_sum bigint"
-        ),
-    )
 
 
 def q_media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

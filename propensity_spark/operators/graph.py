@@ -458,40 +458,6 @@ KCORE_ITERS = 8  # fixpoint reached well inside this on the fixture
 KCORE_MIN_COOCCUR = 2
 
 
-def kcore(edges_sym: DataFrame, k: int = KCORE_K, iters: int = KCORE_ITERS,
-          checkpoint_dir: str | None = None) -> DataFrame:
-    """Peel a SYMMETRIC (src, dst) edge list down to its k-core with a
-    fixed number of peel rounds (extra rounds past the fixpoint are
-    no-ops, so a fixed count is safe and keeps the DuckDB oracle an
-    unrolled CTE chain — the pagerank pattern). Each round is one
-    degree aggregate + two semi-joins, all hash-partitioned on the
-    node key: at any graph size a round costs O(|E|) shuffle, and a
-    lineage cut per round stops plan doubling. Returns surviving
-    (node, core_deg) — degree WITHIN the k-core, >= k by definition."""
-    e = edges_sym
-    prev_cnt = None
-    for _ in range(iters):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .where(F.col("__d") >= k)
-            .select("src")
-        )
-        e = e.join(keep, "src", "leftsemi").join(
-            keep.withColumnRenamed("src", "dst"), "dst", "leftsemi"
-        )
-        e = cut_lineage(e, checkpoint_dir, eager=False)
-        # monotone edge set: equal counts <=> fixpoint; later rounds
-        # are no-ops (r10 early-stop, same argument as kcore_peel).
-        cnt = e.count()
-        if cnt == prev_cnt:
-            break
-        prev_cnt = cnt
-    return e.groupBy("src").agg(F.count(F.lit(1)).alias("core_deg")).select(
-        F.col("src").alias("node"), F.col("core_deg").cast("int").alias("core_deg")
-    )
-
-
 def _copurchase_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Part-level co-purchase graph: parts co-occurring in >= 
     KCORE_MIN_COOCCUR orders, symmetric. Sparser than the brand graph

@@ -549,71 +549,6 @@ ORACLES["sampling_suite"] = f"""
 QUERIES["sampling_suite"] = q_sampling_suite
 
 
-def pack_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    max_tokens: int = 512,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """Sequence packing for training-batch assembly: group documents
-    into bins whose whitespace-token totals stay <= max_tokens
-    (first-fit-decreasing). A globally optimal packing is inherently
-    sequential, so the operator packs PER BLOCK: docs hash-partition
-    into `n_blocks` independent blocks (default: the session's shuffle
-    parallelism) and FFD runs inside each via an Arrow-batched
-    applyInPandas — linear scale-out, with waste bounded by the open
-    bins of each block (FFD is a 11/9-OPT + 1 heuristic per block).
-    Docs longer than max_tokens get a single-doc overflow bin,
-    flagged. Deterministic: block = crc32(doc_id), FFD order =
-    (tokens desc, doc_id asc).
-
-    Returns (doc_id, tokens, bin_id, oversize) with bin_id globally
-    unique (block * 2^32 + local bin index)."""
-    import pandas as pd
-
-    n_blocks = n_blocks or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(F.split("text", " ")).alias("tokens"),
-        (F.crc32(F.col("doc_id").cast("string")) % n_blocks).alias("block"),
-    )
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["tokens", "doc_id"], ascending=[False, True])
-        block = int(pdf["block"].iloc[0]) if len(pdf) else 0
-        bins: list[int] = []  # remaining capacity per local bin
-        out_bin, out_over = [], []
-        for t in pdf["tokens"]:
-            t = int(t)
-            if t > max_tokens:
-                bins.append(-1)  # closed overflow bin
-                out_bin.append(len(bins) - 1)
-                out_over.append(True)
-                continue
-            for i, cap in enumerate(bins):
-                if cap >= t:
-                    bins[i] = cap - t
-                    out_bin.append(i)
-                    out_over.append(False)
-                    break
-            else:
-                bins.append(max_tokens - t)
-                out_bin.append(len(bins) - 1)
-                out_over.append(False)
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].values,
-                "tokens": pdf["tokens"].values,
-                "bin_id": [(block << 32) + b for b in out_bin],
-                "oversize": out_over,
-            }
-        )
-
-    return docs.groupBy("block").applyInPandas(
-        pack, "doc_id bigint, tokens int, bin_id bigint, oversize boolean"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Vocabulary heavy hitters — the corpus term-frequency step of tokenizer
 # (BPE/unigram) vocabulary construction. Scale architecture: counting

@@ -175,39 +175,6 @@ def band_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def incremental_band_pairs(
-    old_bands: DataFrame, new_docs: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental LSH maintenance for daily ingest: instead of
-    re-banding the whole corpus, compute bands for the NEW docs only
-    (map-only) and probe them against old + new bands — every fresh
-    candidate pair touches at least one new doc, so the join cost
-    scales with the batch, not the corpus. Old-old pairs were already
-    emitted by previous runs and are not recomputed.
-
-    Returns (new_pairs, updated_bands): new_pairs has the same
-    (doc_a, doc_b, n_shared_bands) shape as the full recompute —
-    full_pairs(old + new) == previous_pairs(old) UNION new_pairs,
-    the invariant pinned by test_incremental_band_pairs_match_full."""
-    new_bands = band_table(new_docs)
-    all_bands = old_bands.unionByName(new_bands)
-    probe = new_bands.alias("a")
-    build = all_bands.alias("b")
-    pairs = (
-        probe.join(build, "band_val")
-        .where(F.expr("a.doc_id != b.doc_id"))
-        .select(
-            F.least(F.expr("a.doc_id"), F.expr("b.doc_id")).alias("doc_a"),
-            F.greatest(F.expr("a.doc_id"), F.expr("b.doc_id")).alias("doc_b"),
-            "band_val",
-        )
-        .distinct()  # new-new pairs probe from both sides: count each band once
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    return pairs, all_bands
-
-
 def q_minhash_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band candidates + exact n-gram Jaccard verification in one gate
     entry — the REAL scale pipeline: the O(n^2) work is confined to
@@ -302,11 +269,6 @@ def exact_jaccard_pairs(docs: DataFrame, min_jaccard: float) -> DataFrame:
         .where(F.col("jaccard") >= min_jaccard)
         .select("doc_a", "doc_b", "common", "jaccard")
     )
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs at the dedup threshold."""
-    return exact_jaccard_pairs(_parallel_docs(spark, sf_dir), JACCARD_THRESHOLD)
 
 
 MLLIB_EXACT_JACCARD = 0.5  # ground-truth pair threshold for the check
@@ -630,25 +592,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def resolve_duplicates(
-    docs: DataFrame, components: DataFrame, quality_col: str = "n_chars"
-) -> DataFrame:
-    """Keep-one policy over duplicate groups — the step after
-    clustering that actually shrinks the corpus: per component keep
-    the highest-`quality_col` document (ties -> lowest doc_id), drop
-    the rest. ONE component-keyed shuffle: min_by over
-    struct(-quality, doc_id) picks the winner without a rank window
-    or a self-join; the keeper set then left-semi-joins back onto the
-    full rows. `components` is (doc_id, component) as produced by
-    q_dedup_components — singletons map to themselves, so every
-    surviving corpus doc appears exactly once."""
-    joined = docs.join(components, "doc_id")
-    keep = joined.groupBy("component").agg(
-        F.expr(f"min_by(doc_id, struct(-{quality_col}, doc_id))").alias("doc_id")
-    )
-    return docs.join(keep.select("doc_id"), "doc_id", "left_semi")
-
-
 ORACLES["dedup_components"] = f"""
     WITH RECURSIVE pairs AS ({_CAND_SQL}),
          edges AS (
@@ -705,15 +648,6 @@ def contaminated_doc_ids(
         .select("doc_id")
         .distinct()
     )
-
-
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
-    """`docs` minus contaminated rows (LEFT ANTI on the contaminated id
-    set). Composes with the dedup family: run AFTER near-dup removal so
-    a contaminated near-duplicate cannot re-enter via its surviving
-    twin."""
-    bad = contaminated_doc_ids(docs, benchmark, n)
-    return docs.join(bad, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------

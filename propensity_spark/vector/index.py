@@ -23,7 +23,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from propensity_spark.vector.similarity import _cosine, _vec
+from propensity_spark.vector.similarity import _cosine
 
 IVF_K = 16
 IVF_NPROBE = 12
@@ -167,12 +167,3 @@ class VectorIndex:
                 F.round(F.col("cos_raw") + 1e-9, 6).alias("cosine"),
             )
         )
-
-
-def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings -> (vec_id, v array<double>)."""
-    from propensity_spark.io import load_table
-
-    return load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(_vec("embedding")).alias("v")
-    )

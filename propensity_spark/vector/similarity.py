@@ -153,30 +153,6 @@ def cosine_topk(
     )
 
 
-def filtered_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    predicate,
-    k: int = None,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Hybrid (metadata-filtered) vector search — the vector-database
-    pattern where a structured predicate restricts the candidate set.
-    PRE-filtering: the predicate applies before any distance is
-    computed, so it pushes down to the parquet scan (row-group pruning
-    on the metadata column) and the result always holds k true matches
-    — post-filtering a global top-k instead can underfill or miss
-    qualifying neighbors entirely. `corpus` keeps its metadata columns;
-    `predicate` is any Column over them.
-
-    Pass ``exclude_self=False`` when queries come from OUTSIDE the
-    corpus: the default drops corpus rows whose vec_id equals the
-    query_id, which is self-match suppression for in-corpus probes but
-    would silently discard an unrelated (and possibly nearest) corpus
-    vector that merely shares the id number with an external query."""
-    return cosine_topk(corpus.where(predicate), queries, k, exclude_self)
-
-
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: the N_QUERIES lowest vec_ids probe the
     whole corpus (cosine_topk core)."""

@@ -349,6 +349,37 @@ def test_merge_into_empty_table_keeps_a_concurrent_first_commit(spark, store):
     assert set(b.history()) == {str(d1), str(d2)}
 
 
+@pytest.mark.parametrize(
+    "rewrite, want",
+    [
+        (lambda t, d: t.compact(d), {1: 1.0, 2: 1.0, 3: 3.0}),
+        (lambda t, d: t.forget("household_key", [1]), {2: 1.0, 3: 3.0}),
+    ],
+    ids=["compact", "forget"],
+)
+def test_rewrite_keeps_a_commit_made_before_it_takes_the_lock(
+    spark, store, rewrite, want
+):
+    """A merges key 3 into the day while B is about to take the lock
+    for a compact or forget of that day. B reads the table under the
+    lock, so its rewrite starts from A's version and key 3 survives."""
+    d = date(2024, 1, 1)
+    a = FeatureTable(spark, "race", ["household_key", "day"], store)
+    b = FeatureTable(spark, "race", ["household_key", "day"], store)
+    b.create(_frame(spark, d, [1, 2], 1.0))
+    b_lock = b._writer_lock
+
+    @contextlib.contextmanager
+    def a_commits_first():
+        a.merge(_frame(spark, d, [3], 3.0))
+        with b_lock():
+            yield
+
+    b._writer_lock = a_commits_first
+    rewrite(b, d)
+    assert {r["household_key"]: r["amount"] for r in b.read(d).collect()} == want
+
+
 @pytest.mark.parametrize("fail_at", [1, 2])
 def test_interrupted_multi_day_write_never_mixes_versions(
     spark, store, monkeypatch, fail_at

@@ -194,6 +194,40 @@ def test_propose_rotation_refuses_a_head_already_verified(
     assert [ln.split('"')[1] for ln in lines[2:5]] == head
 
 
+def test_every_library_def_is_reachable_from_non_test_code():
+    """Every top-level def and class in propensity_spark/ is reached,
+    through the closure of the identifiers its text names, from code
+    that is not a test: module-level code (the QUERIES / ORACLES
+    registries), tools/, perfbench/, __spark_entry__.py and bench.py.
+    Names match anywhere in the text, strings and comments included,
+    so the check errs toward calling a def live."""
+    import ast
+    import re
+
+    root = Path(__file__).resolve().parents[1]
+    files = [*root.glob("propensity_spark/**/*.py"), *root.glob("tools/*.py"),
+             *root.glob("perfbench/*.py"), root / "__spark_entry__.py", root / "bench.py"]
+    words = lambda lines: set(re.findall(r"\w+", "\n".join(lines)))  # noqa: E731
+    defs, reached = {}, set()
+    for f in files:
+        text = f.read_text()
+        lines, rest = text.splitlines(), text.splitlines()
+        if f.relative_to(root).parts[0] == "propensity_spark":
+            for st in ast.parse(text).body:
+                if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                    a = min([st.lineno] + [d.lineno for d in st.decorator_list]) - 1
+                    defs.setdefault(st.name, set()).update(words(lines[a:st.end_lineno]))
+                    rest[a:st.end_lineno] = [""] * (st.end_lineno - a)
+        reached |= words(rest)
+    todo = list(reached & defs.keys())
+    while todo:
+        new = (defs[todo.pop()] & defs.keys()) - reached
+        reached |= new
+        todo += new
+    dead = sorted(defs.keys() - reached)
+    assert not dead, "unreachable: " + ", ".join(dead)
+
+
 def test_scale_run_reports_rows_exponent_flags_and_split(spark):
     """tools/scale_run.py, the one per-query timing loop: a two-dir run
     reports rows equal to a direct count, the exponent over the parsed

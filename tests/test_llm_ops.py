@@ -3,7 +3,6 @@ invariants (extension operators, SURVEY.md §7)."""
 
 from pyspark.sql import functions as F
 
-from propensity_spark.multimodal.media import _decode_stub
 from propensity_spark.text import dedup as D
 from propensity_spark.vector import similarity as V
 
@@ -33,7 +32,9 @@ def test_minhash_signature_detects_identical_docs(spark, sf_dir):
 
 
 def test_jaccard_pairs_bounded(spark, sf_dir):
-    pairs = D.q_ngram_jaccard_pairs(spark, sf_dir).collect()
+    pairs = D.exact_jaccard_pairs(
+        D._parallel_docs(spark, sf_dir), D.JACCARD_THRESHOLD
+    ).collect()
     assert all(0.0 <= r["jaccard"] <= 1.0 + 1e-9 for r in pairs)
     assert all(r["doc_a"] < r["doc_b"] for r in pairs)
 
@@ -82,11 +83,6 @@ def test_ann_topk_rank_is_dense_and_cosine_sorted(spark, sf_dir):
         assert [g["rank"] for g in grp] == list(range(1, V.TOP_K + 1))
         cosines = [g["cosine"] for g in grp]
         assert cosines == sorted(cosines, reverse=True)
-
-
-def test_decode_stub_deterministic():
-    w, h, f = _decode_stub(b"x" * 1000)
-    assert (w, h, f) == (16 + 1000 % 624, 16 + 7000 % 464, 1 + 1000 % 24)
 
 
 def test_decode_image_rejects_unsupported_formats():
@@ -153,68 +149,12 @@ def test_resize_rgb_nearest_known_values():
     assert resize_rgb_nearest(src, 2, 2, 2, 2) == src
 
 
-def test_decode_media_matches_fused_pipeline(spark, sf_dir):
-    """The staged operators (synthesize_media -> decode_media) produce
-    the same decoded metadata as the fused q_media_pipeline worker —
-    the gate's fused hot path and the composable surface cannot drift.
-    Covers BOTH container legs (PNG for odd doc_ids, PPM for even)."""
-    from propensity_spark.io import load_table
-    from propensity_spark.multimodal.media import (
-        decode_media,
-        q_media_pipeline,
-        synthesize_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    staged = decode_media(synthesize_media(docs))
-    fused = (
-        q_media_pipeline(spark, sf_dir)
-        .select("doc_id", "byte_len", "width", "height", "px_sum", "r8_sum")
-        .distinct()
-    )
-    assert {tuple(r) for r in staged.collect()} == {tuple(r) for r in fused.collect()}
-
-
-def test_media_metadata_schema_and_batch(spark, sf_dir):
-    from propensity_spark.multimodal.media import q_media_metadata
-
-    out = q_media_metadata(spark, sf_dir)
-    assert out.schema.simpleString() == (
-        "struct<doc_id:bigint,mime:string,byte_len:bigint,"
-        "width:int,height:int,n_frames:int>"
-    )
-    assert out.where(F.col("byte_len") <= 0).count() == 0
-
-
 def test_streaming_equals_batch_tumbling(spark, sf_dir):
     from propensity_spark.streaming.windows import q_stream_tumbling, q_tumbling_window
 
     batch = {tuple(r) for r in q_tumbling_window(spark, sf_dir).collect()}
     stream = {tuple(r) for r in q_stream_tumbling(spark, sf_dir).collect()}
     assert batch == stream
-
-
-def test_decontaminate_removes_exactly_overlapping_docs(spark, sf_dir):
-    """Docs sharing an n-gram with the benchmark are dropped; the rest
-    survive untouched; anti-join never invents rows."""
-    from propensity_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    # benchmark = the texts of 5 real docs => those docs (and any doc
-    # sharing a 5-gram with them) must be flagged
-    bench = docs.orderBy("doc_id").limit(5).select("doc_id", "text")
-    bad = {r["doc_id"] for r in D.contaminated_doc_ids(docs, bench, n=5).collect()}
-    bench_ids = {r["doc_id"] for r in bench.collect()}
-    assert bench_ids <= bad  # every benchmark doc is self-contaminated
-    clean = D.decontaminate(docs, bench, n=5)
-    kept = {r["doc_id"] for r in clean.select("doc_id").collect()}
-    assert kept.isdisjoint(bad)
-    assert kept | bad == {r["doc_id"] for r in docs.select("doc_id").collect()}
-    # disjoint benchmark -> nothing removed
-    foreign = spark.createDataFrame(
-        [(1, "zz qq xx yy ww vv uu tt ss rr")], "doc_id long, text string"
-    )
-    assert D.decontaminate(docs, foreign, n=5).count() == docs.count()
 
 
 def test_split_by_hash_deterministic_and_proportional(spark, sf_dir):
@@ -421,96 +361,6 @@ def test_pq_codes_and_reconstruction_gain(spark, sf_dir):
     assert flag == 1.0
 
 
-def test_resolve_duplicates_keep_best(spark, sf_dir):
-    """Keep-one policy: exactly one survivor per duplicate component,
-    the survivor has the component's max quality (ties -> lowest
-    doc_id), and non-duplicated docs all survive."""
-    docs = D.load_table(spark, sf_dir, "documents")
-    comps = D.q_dedup_components(spark, sf_dir)
-    kept = D.resolve_duplicates(docs, comps, "n_chars")
-    n_components = comps.select("component").distinct().count()
-    assert kept.count() == n_components
-    merged = {
-        (r["doc_id"]): r
-        for r in docs.join(comps, "doc_id").collect()
-    }
-    best = {}
-    for r in merged.values():
-        c = r["component"]
-        cur = best.get(c)
-        if cur is None or (-r["n_chars"], r["doc_id"]) < (-cur["n_chars"], cur["doc_id"]):
-            best[c] = r
-    assert {r["doc_id"] for r in kept.collect()} == {r["doc_id"] for r in best.values()}
-
-
-def test_pack_documents_invariants(spark, sf_dir):
-    """Sequence packing: every doc assigned exactly once; no
-    non-oversize bin exceeds max_tokens; oversize bins are single-doc;
-    packing is deterministic; and FFD efficiency beats the trivial
-    one-doc-per-bin layout by a wide margin."""
-    from propensity_spark.text.analysis import pack_documents
-
-    max_tokens = 256
-    rows = pack_documents(spark, sf_dir, max_tokens=max_tokens, n_blocks=8).collect()
-    docs_n = D.load_table(spark, sf_dir, "documents").count()
-    assert len(rows) == docs_n
-    assert len({r["doc_id"] for r in rows}) == docs_n
-    bins = {}
-    for r in rows:
-        bins.setdefault(r["bin_id"], []).append(r)
-    for members in bins.values():
-        if any(m["oversize"] for m in members):
-            assert len(members) == 1 and members[0]["tokens"] > max_tokens
-        else:
-            assert sum(m["tokens"] for m in members) <= max_tokens
-    total = sum(r["tokens"] for r in rows if not r["oversize"])
-    n_regular_bins = len([b for b, ms in bins.items() if not ms[0]["oversize"]])
-    # lower bound on bins is ceil(total/max); FFD within 8 blocks must
-    # stay within 2x the bound + one open bin per block
-    import math
-
-    assert n_regular_bins <= 2 * math.ceil(total / max_tokens) + 8
-    again = pack_documents(spark, sf_dir, max_tokens=max_tokens, n_blocks=8).collect()
-    assert {(r["doc_id"], r["bin_id"]) for r in again} == {
-        (r["doc_id"], r["bin_id"]) for r in rows
-    }
-
-
-def test_incremental_band_pairs_match_full(spark, sf_dir):
-    """Append-only LSH index: banding yesterday's corpus, then probing
-    only the new batch's bands against (old + new), yields exactly the
-    pairs a full recompute finds minus the already-known old-old pairs
-    — same n_shared_bands per pair, nothing missed, nothing duplicated."""
-    docs = D.load_table(spark, sf_dir, "documents")
-    old_docs = docs.where("doc_id % 2 = 0")
-    new_docs = docs.where("doc_id % 2 = 1")
-
-    def pairs_of(bands):
-        a, b = bands.alias("a"), bands.alias("b")
-        return {
-            (r["doc_a"], r["doc_b"]): r["n_shared_bands"]
-            for r in a.join(b, "band_val")
-            .where("a.doc_id < b.doc_id")
-            .groupBy(
-                F.expr("a.doc_id").alias("doc_a"), F.expr("b.doc_id").alias("doc_b")
-            )
-            .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-            .collect()
-        }
-
-    full = pairs_of(D.band_table(docs))
-    old_bands = D.band_table(old_docs)
-    old_pairs = pairs_of(old_bands)
-    new_pairs_df, updated = D.incremental_band_pairs(old_bands, new_docs)
-    new_pairs = {
-        (r["doc_a"], r["doc_b"]): r["n_shared_bands"] for r in new_pairs_df.collect()
-    }
-    assert set(old_pairs) & set(new_pairs) == set()  # no recomputed history
-    merged = {**old_pairs, **new_pairs}
-    assert merged == full
-    assert updated.count() == D.band_table(docs).count()
-
-
 def test_media_bridge_bytes_not_chars_non_ascii(spark):
     """The media_bridge hist/resize sections operate on UTF-8 payload
     BYTES. A multi-byte document must reconstruct the byte histogram
@@ -595,53 +445,6 @@ def test_strip_boilerplate_removes_frequent_lines(spark):
     assert out[100]["clean_text"] == "" and out[100]["n_removed_lines"] == 1
 
 
-def test_filtered_topk_prefilters_metadata(spark, sf_dir):
-    """Hybrid search: a label predicate restricts candidates BEFORE
-    scoring, so every neighbor satisfies it and per-label results equal
-    a brute-force run over only that label's subset (post-filtering a
-    global top-k would underfill instead)."""
-    from propensity_spark.io import load_table
-    from propensity_spark.vector.similarity import (
-        TOP_K,
-        cosine_topk,
-        filtered_topk,
-        _vec,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(_vec("embedding")).alias("v"), "label"
-    )
-    queries = (
-        emb.orderBy("vec_id")
-        .limit(3)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    )
-    target = emb.select(F.min("label")).collect()[0][0]
-
-    got = filtered_topk(emb, queries, F.col("label") == target).collect()
-    assert len(got) > 0
-    allowed = {
-        r["vec_id"] for r in emb.where(F.col("label") == target).collect()
-    }
-    assert {r["vec_id"] for r in got} <= allowed  # every hit passes the filter
-
-    want = cosine_topk(
-        emb.where(F.col("label") == target), queries
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted([(r["query_id"], r["rank"], r["vec_id"]) for r in got]) == sorted(
-        [(r["query_id"], r["rank"], r["vec_id"]) for r in want]
-    )
-    # each query gets a FULL k among qualifying rows (pre-filter never
-    # underfills while the filtered corpus has >= k candidates)
-    per_q = {}
-    for r in got:
-        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + 1
-    n_candidates = len(allowed)
-    for q, n in per_q.items():
-        assert n == min(TOP_K, n_candidates - (1 if q in allowed else 0))
-
-
 def test_strip_boilerplate_keeps_null_text_docs(spark):
     """A NULL-text document must survive as clean_text='' (split(NULL)
     explodes to zero rows and previously dropped the doc entirely)."""
@@ -679,91 +482,6 @@ def test_misra_gries_topk_contains_true_heavy_hitters(spark, sf_dir):
     for tok, cnt in got.items():
         assert cnt <= exact[tok], tok  # MG never overcounts
     assert set(true_top5) <= set(got), (true_top5, sorted(got))
-
-
-def _ref_bpe(word_freqs, n_merges, min_count=2):
-    """Pure-Python reference BPE (Sennrich 2016 get_stats/merge loop)
-    with the same deterministic tie-break as the distributed one."""
-    from propensity_spark.text.tokenizer import END
-
-    table = [(list(w) + [END], f) for w, f in word_freqs.items()]
-    merges = []
-    for _ in range(n_merges):
-        counts = {}
-        for syms, f in table:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                counts[p] = counts.get(p, 0) + f
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        (a, b), cnt = best
-        if cnt < min_count:
-            break
-        merges.append((a, b, cnt))
-        new_table = []
-        for syms, f in table:
-            out, i = [], 0
-            while i < len(syms):
-                if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_table.append((out, f))
-        table = new_table
-    return merges
-
-
-def test_bpe_train_matches_reference_implementation(spark, sf_dir):
-    """Distributed BPE == the sequential reference, bit-identical merge
-    list (pair AND weighted count) on both a crafted corpus with known
-    merges and the fixture documents."""
-    from propensity_spark.text.tokenizer import bpe_train, bpe_vocab, word_frequencies
-
-    crafted = spark.createDataFrame(
-        [("low low low lower lower newest newest newest widest",),
-         ("low newest widest widest 'quote' \\slash",)],
-        "text string",
-    )
-    wf = {
-        r["word"]: r["freq"] for r in word_frequencies(crafted).collect()
-    }
-    want = _ref_bpe(wf, 12)
-    got = bpe_train(spark, crafted, 12)
-    assert got == want
-    assert len(bpe_vocab(got)) == len(got)
-
-    from propensity_spark.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    wf2 = {r["word"]: r["freq"] for r in word_frequencies(docs).collect()}
-    assert bpe_train(spark, docs, 8) == _ref_bpe(wf2, 8)
-
-
-def test_bpe_encode_roundtrip_and_vocab_closure(spark, sf_dir):
-    """Encoding with learned merges must be lossless (joining tokens
-    and splitting on the end-of-word marker reconstructs the exact
-    lowercased word sequence) and closed over the learned vocabulary
-    (every emitted token is a learned subword or a raw character)."""
-    from propensity_spark.io import load_table
-    from propensity_spark.text.tokenizer import END, bpe_encode, bpe_train, bpe_vocab
-
-    docs = load_table(spark, sf_dir, "documents").limit(100)
-    merges = bpe_train(spark, docs, 20)
-    assert merges
-    encoded = {r["doc_id"]: r["tokens"] for r in bpe_encode(docs, merges).collect()}
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-
-    allowed = set(bpe_vocab(merges))
-    for doc_id, toks in encoded.items():
-        words = [w for w in texts[doc_id].lower().split(" ") if w]
-        rebuilt = "".join(toks).split(END)[:-1]
-        assert rebuilt == words, doc_id  # lossless
-        for t in toks:
-            base = t[:-len(END)] if t.endswith(END) else t
-            assert t in allowed or len(base) <= 1 or t == END, t
 
 
 def test_perplexity_filter_separates_gibberish(spark, tmp_path):
@@ -979,10 +697,13 @@ def test_vector_index_roundtrip_add_and_partition_pruning(spark, sf_dir, tmp_pat
 
     from pyspark.sql import functions as F
 
-    from propensity_spark.vector.index import VectorIndex, load_vectors
-    from propensity_spark.vector.similarity import cosine_topk
+    from propensity_spark.io import load_table
+    from propensity_spark.vector.index import VectorIndex
+    from propensity_spark.vector.similarity import _vec, cosine_topk
 
-    vecs = load_vectors(spark, sf_dir)
+    vecs = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.expr(_vec("embedding")).alias("v")
+    )
     idx = VectorIndex.build(spark, vecs, str(tmp_path / "ivf"))
 
     reloaded = VectorIndex.load(spark, str(tmp_path / "ivf"))

@@ -66,33 +66,6 @@ def test_scoring_skips_failed_models(spark, sf_dir, store, day, manifest):
     assert scored.where(~F.col("prediction").between(0, 1)).count() == 0
 
 
-def test_registry_promote_and_rollback(spark, manifest, tmp_path):
-    mf, real = manifest
-    reg = M.ModelRegistry(spark, str(tmp_path / "registry"))
-    reg.register(mf)  # v1 -> Staging (failed rows keep 'failed')
-    assert reg.production().count() == 0
-    reg.promote(real, 1)
-    assert [r["version"] for r in reg.production().collect()] == [1]
-
-    reg.register(mf)  # v2
-    reg.promote(real, 2)
-    prod = reg.production().collect()
-    assert [r["version"] for r in prod] == [2]
-    stages = {
-        (r["version"]): r["stage"]
-        for r in reg._read().where(F.col("commodity_desc") == real).collect()
-    }
-    assert stages[1] == "Archived"
-
-    reg.rollback(real)
-    assert [r["version"] for r in reg.production().collect()] == [1]
-    # failed rows never reach Production
-    assert (
-        reg._read().where((F.col("stage") == "Production") & F.col("model_path").isNull()).count()
-        == 0
-    )
-
-
 def test_gbt_is_default_model(spark, manifest):
     from pyspark.ml import PipelineModel
     from pyspark.ml.classification import GBTClassificationModel
@@ -198,34 +171,6 @@ def test_tvs_parallelism_tracks_cluster(spark):
     assert est.getParallelism() == expected
 
 
-def test_calibrate_scores_monotone_and_closer_to_truth(spark):
-    """Isotonic calibration: with purchase rate = score^2 the raw score
-    over-states probability everywhere; the calibrated output must (1)
-    be monotone in the raw score (ranking preserved), (2) stay in
-    [0, 1], and (3) cut the Brier score vs the raw predictions."""
-    rows = []
-    for i in range(1, 21):  # scores 0.05 .. 1.0, 40 rows each
-        s = i / 20.0
-        n_pos = round(40 * s * s)
-        rows += [(s, 1.0)] * n_pos + [(s, 0.0)] * (40 - n_pos)
-    df = spark.createDataFrame(rows, "prediction double, purchased double")
-    calibrated, model = M.calibrate_scores(df, df)
-    got = (
-        calibrated.groupBy("prediction")
-        .agg(F.first("calibrated").alias("c"))
-        .orderBy("prediction")
-        .collect()
-    )
-    cs = [r["c"] for r in got]
-    assert all(0.0 <= c <= 1.0 for c in cs)
-    assert all(a <= b + 1e-9 for a, b in zip(cs, cs[1:]))  # monotone
-    brier = calibrated.agg(
-        F.avg((F.col("calibrated") - F.col("purchased")) ** 2).alias("cal"),
-        F.avg((F.col("prediction") - F.col("purchased")) ** 2).alias("raw"),
-    ).collect()[0]
-    assert brier["cal"] < brier["raw"]
-
-
 def test_basket_affinity_matches_mllib_fpgrowth(spark, sf_dir):
     """The exact size-1/size-2 itemset supports in q_basket_affinity
     must equal MLlib FPGrowth's freqItemsets at the same minSupport —
@@ -314,35 +259,6 @@ def test_basket_affinity_3_matches_mllib_fpgrowth(spark, sf_dir):
     assert got == fp
 
 
-def test_quality_classifier_learns_planted_signal_on_fixture_docs(spark, sf_dir):
-    """Separable signal planted in the REAL documents fixture: half the
-    docs (by doc_id parity) get a marker token appended; the hashed-TF
-    LogisticRegression must recover the split on held-out docs — the
-    end-to-end evidence that the learned filter can pick up a
-    document-level signal from fixture text, not just the synthetic
-    two-sentence corpus."""
-    from propensity_spark.io import load_table
-    from propensity_spark.ml.quality import (
-        evaluate_quality_classifier,
-        train_quality_classifier,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 2 == 0, F.concat(F.col("text"), F.lit(" refmarker"))
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-        ((F.col("doc_id") % 2) == 0).cast("double").alias("label"),
-    )
-    train = docs.where("doc_id % 5 != 0")
-    test = docs.where("doc_id % 5 = 0")
-    model = train_quality_classifier(train)
-    metrics = evaluate_quality_classifier(model, test)
-    assert metrics["auc"] > 0.95, metrics
-
-
 def test_quality_filter_gate_matches_float_solve(spark, sf_dir):
     """The exact-integer Cramer decision in q_quality_filter agrees
     with an independent float least-squares solve (numpy lstsq) on the
@@ -364,69 +280,6 @@ def test_quality_filter_gate_matches_float_solve(spark, sf_dir):
             assert r["quality_keep"] == int(s > 0.5), (r, s)
     kept = sum(r["quality_keep"] for r in rows)
     assert 0 < kept < len(rows)  # the filter actually filters
-
-
-def test_quality_classifier_separates_reference_from_noise(spark):
-    """fastText-style quality filter on a separable corpus: train on
-    weak labels (reference vocab vs noise vocab), verify held-out
-    perfection on unseen doc_ids and that score_quality's keep flag
-    agrees with the probabilities."""
-    from propensity_spark.ml.quality import (
-        evaluate_quality_classifier,
-        score_quality,
-        train_quality_classifier,
-    )
-
-    ref = "the model trains on curated encyclopedic prose with citations"
-    noise = "zxq wvu qqq click here buy now free prize winner jackpot"
-    rows = [(i, ref, 1.0) for i in range(30)] + [
-        (i + 100, noise, 0.0) for i in range(30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, label double")
-    train = docs.where("doc_id % 5 != 0")
-    test = docs.where("doc_id % 5 = 0")
-
-    model = train_quality_classifier(train)
-    metrics = evaluate_quality_classifier(model, test)
-    assert metrics["auc"] == 1.0 and metrics["accuracy"] == 1.0, metrics
-
-    scored = {r["doc_id"]: r for r in score_quality(model, test).collect()}
-    for d, r in scored.items():
-        expected = 1 if d < 100 else 0
-        assert r["quality_keep"] == expected, (d, r["quality_prob"])
-        assert 0.0 <= r["quality_prob"] <= 1.0
-
-
-def test_quality_classifier_non_default_text_col(spark):
-    """The text_col contract must hold end to end: a model trained on
-    `body` evaluates and scores `body`, never a hardcoded `text` —
-    here a decoy `text` column carries the OPPOSITE content, so any
-    hardcoding flips every prediction and fails loudly."""
-    from propensity_spark.ml.quality import (
-        evaluate_quality_classifier,
-        score_quality,
-        train_quality_classifier,
-    )
-
-    ref = "the model trains on curated encyclopedic prose with citations"
-    noise = "zxq wvu qqq click here buy now free prize winner jackpot"
-    rows = [(i, noise, ref, 1.0) for i in range(30)] + [
-        (i + 100, ref, noise, 0.0) for i in range(30)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, body string, label double"
-    )
-    train = docs.where("doc_id % 5 != 0")
-    test = docs.where("doc_id % 5 = 0")
-
-    model = train_quality_classifier(train, text_col="body")
-    metrics = evaluate_quality_classifier(model, test, text_col="body")
-    assert metrics["auc"] == 1.0 and metrics["accuracy"] == 1.0, metrics
-    scored = {
-        r["doc_id"]: r["quality_keep"]
-        for r in score_quality(model, test, text_col="body").collect()
-    }
-    assert all(v == (1 if d < 100 else 0) for d, v in scored.items())
 
 
 def test_tpe_proposals_adapt_toward_good_region():

@@ -372,16 +372,9 @@ def test_new_operator_plans_have_no_red_flags(spark, sf_dir):
     from propensity_spark.operators.features import multi_day_features
     from propensity_spark.operators.relational import silver_transactions
     from propensity_spark.text.dedup import strip_boilerplate
-    from propensity_spark.vector.similarity import _vec, filtered_topk
 
     docs = load_table(spark, sf_dir, "documents")
     ev = load_table(spark, sf_dir, "events")
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(_vec("embedding")).alias("v"), "label"
-    )
-    queries = emb.limit(2).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
     silver = silver_transactions(spark, sf_dir)
     plans = {
         "strip_boilerplate": plan_of(strip_boilerplate(docs)),
@@ -396,9 +389,6 @@ def test_new_operator_plans_have_no_red_flags(spark, sf_dir):
             multi_day_features(
                 silver, ["household_key"], [datetime.date(2024, 3, 1)]
             )
-        ),
-        "filtered_topk": plan_of(
-            filtered_topk(emb, queries, F.col("label") == 0)
         ),
     }
     for name, plan in plans.items():
@@ -493,51 +483,6 @@ def test_percentiles_api_defaults_to_sketch(spark, sf_dir):
         assert abs(row["o_totalprice_p50"] - wants[status]) < 1e-9
     # global (no `by`) returns one row
     assert percentiles(orders, "o_totalprice").count() == 1
-
-
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts
-    sort-merge-join with ZERO Exchange — the shuffle happened once at
-    write time. The same join over plain parquet shuffles both sides
-    (sanity-check that the assertion means something)."""
-    from propensity_spark.io import write_bucketed
-
-    left = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 10000, 3).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("b")
-    )
-    write_bucketed(left, "bkt_left", "k", 8, path=str(tmp_path / "l"))
-    write_bucketed(right, "bkt_right", "k", 8, path=str(tmp_path / "r"))
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("bkt_left").join(
-                spark.table("bkt_right"), "k"
-            )
-            n = joined.count()
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan, plan
-            # correctness: every right key joins
-            assert n == len(range(0, 10000, 3))
-
-            # plain parquet control: same join DOES exchange
-            left.write.mode("overwrite").parquet(str(tmp_path / "pl"))
-            right.write.mode("overwrite").parquet(str(tmp_path / "pr"))
-            control = spark.read.parquet(str(tmp_path / "pl")).join(
-                spark.read.parquet(str(tmp_path / "pr")), "k"
-            )
-            control.count()
-            cplan = control._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" in cplan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
 
 
 def test_incremental_join_view_broadcast_retract_and_exactness(spark, sf_dir):

@@ -106,25 +106,6 @@ def test_spark_sql_api_matches_dataframe_plans(spark, sf_dir):
         assert via_sql == via_df and len(via_df) > 0
 
 
-def test_corrupt_csv_rows_are_quarantined_not_dropped(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from propensity_spark.io import CORRUPT_COL, read_csv_capturing_corrupt
-
-    p = tmp_path / "feed.csv"
-    p.write_text("id,amount\n1,10.5\nnot_an_int,oops\n3,7.25\n")
-    schema = T.StructType(
-        [T.StructField("id", T.IntegerType()), T.StructField("amount", T.DoubleType())]
-    )
-    df = read_csv_capturing_corrupt(spark, str(p), schema).cache()
-    good = df.where(F.col(CORRUPT_COL).isNull())
-    bad = df.where(F.col(CORRUPT_COL).isNotNull())
-    assert df.count() == 3  # nothing silently dropped
-    assert {r["id"] for r in good.collect()} == {1, 3}
-    assert [r[CORRUPT_COL] for r in bad.collect()] == ["not_an_int,oops"]
-    df.unpersist()
-
-
 def test_control_memo_keyed_by_application_id(spark, sf_dir):
     """The control-table memo is keyed by applicationId (unique per
     SparkContext), not id(spark): a GC'd-then-reallocated session object
@@ -1291,42 +1272,6 @@ def test_active_users_windows_hand_computed(spark, tmp_path):
     assert out[("mau", date(2024, 1, 9))] == 3
 
 
-def test_sorted_export_disjoint_file_ranges_and_roundtrip(spark, tmp_path):
-    """sorted_export: files carry pairwise-DISJOINT sort-key ranges
-    (parquet footer min/max — what lets a range predicate prune whole
-    files), rows are sorted within each file, and the round-trip loses
-    nothing."""
-    import pyarrow.parquet as pq
-
-    from propensity_spark.io import sorted_export
-
-    df = spark.createDataFrame(
-        [((i * 37) % 1000, f"v{i}") for i in range(1000)], "k int, v string"
-    )
-    out = str(tmp_path / "out")
-    sorted_export(df, out, ["k"], n_files=4)
-
-    ranges = []
-    total = 0
-    for f in sorted((tmp_path / "out").glob("part-*.parquet")):
-        pf = pq.ParquetFile(f)
-        total += pf.metadata.num_rows
-        if pf.metadata.num_rows == 0:
-            continue
-        ks = pf.read(columns=["k"]).column("k").to_pylist()
-        assert ks == sorted(ks), f"{f.name} not sorted within file"
-        ranges.append((min(ks), max(ks)))
-    assert total == 1000
-    assert len(ranges) >= 3  # range partitioner actually split
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, f"overlapping file ranges {(lo1, hi1)} {(lo2, hi2)}"
-
-    back = spark.read.parquet(out)
-    assert back.count() == 1000
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
 def test_seasonality_dow_profile(spark, tmp_path):
     """Seasonality: a series where one weekday is systematically 2x
     gets a dow_mean 2x the others, and each day's deviation vs its own
@@ -1947,32 +1892,6 @@ def test_variant_drift_profile_and_missing_keys(spark, tmp_path):
         .collect()[0]["s"]
     )
     assert "k: BIGINT" in sch and "new_field" in sch, sch
-
-
-def test_xml_roundtrip_preserves_rows_and_types(spark, sf_dir, tmp_path):
-    """Spark 4 native XML source: orders sample exports to XML and
-    reads back row-identical under an explicit schema (S1 family,
-    beside the CSV/JSON/ORC round-trips)."""
-    from pyspark.sql import types as T
-
-    from propensity_spark.io import load_table, read_xml, write_xml
-
-    src = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    ).limit(500)
-    dest = str(tmp_path / "orders_xml")
-    write_xml(src, dest, row_tag="order")
-
-    schema = T.StructType([
-        T.StructField("o_orderkey", T.LongType()),
-        T.StructField("o_custkey", T.LongType()),
-        T.StructField("o_orderstatus", T.StringType()),
-        T.StructField("o_totalprice", T.DoubleType()),
-    ])
-    back = read_xml(spark, dest, row_tag="order", schema=schema)
-    assert back.count() == src.count()
-    assert back.exceptAll(src.select(schema.fieldNames())).count() == 0
-    assert src.select(schema.fieldNames()).exceptAll(back).count() == 0
 
 
 def test_target_encode_loo_semantics(spark, tmp_path):
